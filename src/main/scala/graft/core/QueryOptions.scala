@@ -58,16 +58,18 @@ object QueryOptions {
     * documented consequence that regexes containing `&`/`=` cannot be
     * expressed is preserved, SURVEY.md §2.5 C1).
     */
-  def parseQueryString(qs: String): QueryOptions = {
-    val decoded = java.net.URLDecoder.decode(qs, "UTF-8")
-    val m = decoded.split("&").iterator.filter(_.nonEmpty).map { kv =>
+  def parseQueryString(qs: String): QueryOptions = fromMap(queryArgs(qs))
+
+  /** The raw query string as a key → value map, decoded before it is
+    * split (the quirk above); a bare key maps to "true". The one splitter
+    * behind [[parseQueryString]] and the HTTP routes. */
+  def queryArgs(qs: String): Map[String, String] =
+    java.net.URLDecoder.decode(qs, "UTF-8").split("&").iterator.filter(_.nonEmpty).map { kv =>
       kv.split("=", 2) match {
         case Array(k, v) => k -> v
         case Array(k) => k -> "true"
       }
     }.toMap
-    fromMap(m)
-  }
 
   private val known = Set(
     "bootstrap-servers", "topics", "key-deserializer", "value-deserializer",

@@ -1,7 +1,12 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md). All
@@ -22,13 +27,67 @@ object Tables {
     * generations produce the identical normalized schema; DuckDB's parquet
     * reader performs the same ns→µs truncation on the old layout, so both
     * engines see identical timestamps either way.
+    *
+    * The parquet relation is resolved once per session through
+    * [[parquet]]: a repeated load lists no files and runs no
+    * schema-inference job.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/$name.parquet")
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
-    normalizeEventsTs(df)
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalizeEventsTs(parquet(spark, s"$sfDir/$name.parquet"))
+  }
+
+  private final case class Resolved(state: Seq[String], relation: BaseRelation)
+
+  /** One resolved relation per (session, path). A session is a key by
+    * identity, so two sessions never share a relation (it carries its
+    * session's conf). */
+  private val resolved = new ConcurrentHashMap[(SparkSession, String), Resolved]()
+
+  /** A parquet file or directory as a DataFrame, with its
+    * `HadoopFsRelation` (file listing, partition discovery and the
+    * one-task schema-inference job) resolved ONCE per session and path.
+    *
+    * Keying and invalidation: the entry for (session, path) is kept
+    * together with the path's [[fileState]] — name, length and mtime of
+    * every file under it, recursively. A call whose state differs (an
+    * archive rewritten in place, a regenerated fixture) resolves afresh
+    * and replaces the entry, so the memo holds at most one entry per
+    * (session, path) and never serves a stale listing. Entries of
+    * sessions whose context has stopped are dropped.
+    *
+    * Every call wraps the relation in a new `LogicalRelation`
+    * (`baseRelationToDataFrame`), so each caller gets fresh attribute ids:
+    * two loads of one table in one query (a self-join) stay distinct.
+    * DataFrames built before a rewrite still read the old files. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    resolved.keySet.removeIf(_._1.sparkContext.isStopped)
+    val state = fileState(spark, path)
+    val entry = resolved.compute((spark, path), (_, old) =>
+      if (old != null && old.state == state) old
+      // What `spark.read.parquet(path)` resolves, minus the DataFrame.
+      else Resolved(state, DataSource(spark, className = "parquet",
+        options = Map("path" -> path)).resolveRelation()))
+    spark.baseRelationToDataFrame(entry.relation)
+  }
+
+  /** The paths [[parquet]] holds a relation for in `spark`. */
+  private[graft] def resolvedPaths(spark: SparkSession): Seq[String] =
+    resolved.keySet.toArray.toSeq.collect {
+      case (s: SparkSession, p: String) if s eq spark => p
+    }
+
+  /** Sorted `path:length:mtime` of every file under `path` (the file
+    * itself when it is one); empty when nothing is there. Pure file
+    * metadata: no Spark job, no data read. */
+  private def fileState(spark: SparkSession, path: String): Seq[String] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(st: FileStatus): Seq[String] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq(s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+    try walk(fs.getFileStatus(root)).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Normalize a raw fixture frame to the engine-facing schema: a long

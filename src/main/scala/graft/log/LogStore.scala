@@ -59,9 +59,16 @@ object LogStore {
 
   /** Read an archived topic back in the canonical record-column order.
     * Partition predicates prune directories; offset/timestamp predicates
-    * push to parquet. */
+    * push to parquet.
+    *
+    * The topic's relation is resolved once per session
+    * ([[graft.core.Tables.parquet]]): a `/search` against a warm session
+    * lists no files and runs no schema-inference job to build its plan.
+    * The memo is keyed by the file state under the topic directory, so a
+    * [[materialize]] over the same directory is picked up by the next
+    * call. */
   def topic(spark: SparkSession, storeDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$storeDir/$name")
+    graft.core.Tables.parquet(spark, s"$storeDir/$name")
       .select(col("topic"),
         col("partition").cast("int").as("partition", RecordLog.partitionMeta),
         col("offset"), col("timestamp"), col("key"), col("value"))

@@ -25,6 +25,8 @@ object JsonArrayRender {
   val Pioneer = """{"type":"pioneer"}"""
 
   private val mapper = new ObjectMapper()
+  // Immutable and thread-safe: one for every record of every request.
+  private val prettyWriter = mapper.writerWithDefaultPrettyPrinter()
 
   /** Try-parse a JSON-ish text the way cheshire's parse-string does: any
     * valid JSON value (object, array, number, bool, null) replaces the
@@ -46,7 +48,7 @@ object JsonArrayRender {
         }
       case _ => ()
     }
-    ", " + mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    ", " + prettyWriter.writeValueAsString(node)
   }
 
   /** Stream the DataFrame through `out` as one chunked JSON array. */

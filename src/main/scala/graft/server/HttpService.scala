@@ -52,19 +52,10 @@ final class HttpService(spark: SparkSession, port: Int,
     * containing quotes/backslashes (e.g. an echoed bad option value) must
     * still emit valid JSON (VERDICT r3 item 7). */
   private def errorJson(msg: String): String =
-    s"""{"error":${com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
-      .writeValueAsString(if (msg == null) "" else msg)}}"""
+    s"""{"error":${HttpService.errorMapper.writeValueAsString(if (msg == null) "" else msg)}}"""
 
-  private def queryArgs(ex: HttpExchange): Map[String, String] = {
-    val qs = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-    val decoded = java.net.URLDecoder.decode(qs, "UTF-8")
-    decoded.split("&").iterator.filter(_.nonEmpty).map { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => k -> v
-        case Array(k) => k -> "true"
-      }
-    }.toMap
-  }
+  private def queryArgs(ex: HttpExchange): Map[String, String] =
+    QueryOptions.queryArgs(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
 
   private def searchHandler(ex: HttpExchange): Unit = {
     val args = try queryArgs(ex) catch { case e: Exception =>
@@ -133,9 +124,13 @@ final class HttpService(spark: SparkSession, port: Int,
     *  - L3: the wall-clock kill switch (`stop-consumers-after-n-seconds`)
     *    expiring the `awaitTermination` wait, after which the array is
     *    closed cleanly — the reference's forgotten-consumer guard; or
-    *  - L4: the client disconnecting — the broken pipe fails the batch
-    *    writer, which kills the streaming query (the reference lets the
-    *    consumer run on, a known inefficiency, `core.clj:85-87`).
+    *  - L4: the client disconnecting — the broken pipe fails a write,
+    *    which stops the streaming query (the reference lets the consumer
+    *    run on, a known inefficiency, `core.clj:85-87`). A quiet topic
+    *    writes no records, so every trigger interval also sends a
+    *    single-space keep-alive chunk: JSON allows whitespace between
+    *    array elements, and a departed client fails that write within a
+    *    few intervals instead of holding the stream until the deadline.
     * Follow responses are never cached (unbounded, and the snapshot they
     * start from is already stale by the time a replay would run).
     */
@@ -150,27 +145,34 @@ final class HttpService(spark: SparkSession, port: Int,
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(200, 0L) // chunked
     val os: OutputStream = ex.getResponseBody
-    val out: String => Unit = s => { os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush() }
+    // Two writers — the stream thread's batches and this thread's
+    // keep-alives — so each chunk is written whole under the lock.
+    val out: String => Unit = s => os.synchronized {
+      os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush()
+    }
     try {
       out("[")
       out(JsonArrayRender.Pioneer)
       val q = df.writeStream
         .queryName(s"graft-follow-${HttpService.followIds.incrementAndGet()}")
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(
+          HttpService.FollowIntervalMs))
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // foreachBatch runs driver-side on the stream thread — the only
-          // writer to `os` until the query is stopped below.
+          // foreachBatch runs driver-side on the stream thread.
           val it = batch.sortWithinPartitions("type", "topic", "partition", "offset")
             .toJSON.toLocalIterator()
           while (it.hasNext) out(JsonArrayRender.renderRecord(it.next()))
         }
         .start()
       try {
-        // L3: false = deadline expired with the tail still alive — the
-        // kill switch, not an error. True = the query died (L4 broken
-        // pipe or a runtime failure); exceptions surface via the catch.
-        q.awaitTermination(config.stopConsumersAfterNSeconds * 1000L)
+        // L3: the deadline expiring with the tail still alive is the kill
+        // switch, not an error. The query dying (L4 broken pipe in a
+        // batch, or a runtime failure) surfaces via the catch; so does a
+        // keep-alive write failing (L4 on a quiet topic).
+        val deadline = System.nanoTime() + config.stopConsumersAfterNSeconds * 1000000000L
+        while (!q.awaitTermination(HttpService.FollowIntervalMs) && System.nanoTime() < deadline)
+          out(" ")
       } finally {
         try q.stop() catch { case _: Exception => () }
       }
@@ -209,9 +211,11 @@ final class HttpService(spark: SparkSession, port: Int,
     * then recomputes, never misreads (Materialize's determinism
     * contract; MaterializeSpec pins the race).
     *
-    * Unlike `/search` — whose build phase runs no Spark jobs — building
-    * a pipeline query EXECUTES work (barrier counts, bounded-metadata
-    * collects, the q63 CC loop), so the L3 deadline group opens BEFORE
+    * Unlike `/search` — whose build phase runs no Spark job once the
+    * session has resolved its record-log relations (`Tables.parquet`;
+    * `SearchBuildJobsSpec` pins it) — building a pipeline query can
+    * EXECUTE work (barrier counts, bounded-metadata collects, the q63 CC
+    * loop, a first resolution), so the L3 deadline group opens BEFORE
     * the build: a wall-clock expiry mid-build cancels the jobs and
     * surfaces as a 400 (the response is uncommitted until the build
     * succeeds). L4 client-cancel still applies from the first write. */
@@ -373,6 +377,12 @@ final class HttpService(spark: SparkSession, port: Int,
 }
 
 object HttpService {
+  /** The follow stream's trigger interval, which is also its keep-alive
+    * interval. */
+  private val FollowIntervalMs = 500L
+
+  private val errorMapper = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+
   /** Session-unique names for active follow queries (queryName must be
     * unique across concurrently active streaming queries). */
   private val followIds = new java.util.concurrent.atomic.AtomicInteger()

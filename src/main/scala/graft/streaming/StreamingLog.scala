@@ -94,11 +94,11 @@ object StreamingLog {
     val dir = streamDir(sfDir)
     // The stream source needs an explicit schema declaring what's ON DISK
     // (it cannot infer, and the fixture's ts physical type has varied
-    // across generations — nanos-as-long vs native micros). Probe the raw
-    // file schema with a batch read, then apply the shared normalization
-    // so the stream sees the exact batch schema.
+    // across generations — nanos-as-long vs native micros). Take the raw
+    // file schema from the session's resolved batch relation, then apply
+    // the shared normalization so the stream sees the exact batch schema.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(dir).schema
+    val rawSchema = Tables.parquet(spark, dir).schema
     Tables.normalizeEventsTs(spark.readStream.schema(rawSchema).parquet(dir))
   }
 }

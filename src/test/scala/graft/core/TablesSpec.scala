@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,5 +43,37 @@ class TablesSpec extends AnyFunSuite {
     assert(ev.schema("ts").dataType === TimestampType)
     assert(ev.schema.fields.forall(_.dataType != TimestampNTZType))
     assert(ev.count() > 0)
+  }
+
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .get.asInstanceOf[HadoopFsRelation]
+
+  test("two loads of one table in one query get distinct attributes; a self-join resolves") {
+    val a = Tables.load(spark, TestSpark.Sf, "events")
+    val b = Tables.load(spark, TestSpark.Sf, "events")
+    assert(relationOf(a) eq relationOf(b), "the session's relation is resolved once")
+    val ids = (df: DataFrame) => df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(ids(a).intersect(ids(b)).isEmpty)
+    val joined = a.join(b, a("event_id") === b("event_id")).count()
+    // The same self-join over two independent reads: how every load
+    // resolved before the memo.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = s"${TestSpark.Sf}/events.parquet"
+    val ra = Tables.normalizeEventsTs(spark.read.parquet(path))
+    val rb = Tables.normalizeEventsTs(spark.read.parquet(path))
+    assert(joined > 0 && joined === ra.join(rb, ra("event_id") === rb("event_id")).count())
+  }
+
+  test("two sessions never share a relation") {
+    val other = spark.newSession()
+    val mine = relationOf(Tables.load(spark, TestSpark.Sf, "orders"))
+    val theirs = relationOf(Tables.load(other, TestSpark.Sf, "orders"))
+    assert(mine ne theirs)
+    assert(mine.sparkSession eq spark)
+    assert(theirs.sparkSession eq other)
+    val path = s"${TestSpark.Sf}/orders.parquet"
+    assert(Tables.resolvedPaths(spark).contains(path))
+    assert(Tables.resolvedPaths(other) == Seq(path))
   }
 }

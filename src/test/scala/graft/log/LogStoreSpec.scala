@@ -3,7 +3,7 @@ package graft.log
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.core.QueryOptions
+import graft.core.{QueryOptions, Tables}
 
 class LogStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -71,5 +71,22 @@ class LogStoreSpec extends AnyFunSuite {
     // The filter reached the file index, not a post-scan Filter only.
     assert(plan.contains("PartitionFilters") &&
       plan.matches("(?s).*PartitionFilters: \\[[^\\]]*partition[^\\]]*\\].*"), plan)
+  }
+
+  test("an archive rewritten in place: the next topic read sees the new rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
+    LogStore.materialize(spark, TestSpark.Sf, dir, Seq("events"))
+    val full = LogStore.topic(spark, dir, "events").count()
+    // A second fixture generation at another location: the first 100 events.
+    val sf2 = java.nio.file.Files.createTempDirectory("graft-rewrite-sf").toString
+    Tables.load(spark, TestSpark.Sf, "events").orderBy("event_id").limit(100)
+      .write.parquet(s"$sf2/events.parquet")
+    LogStore.materialize(spark, sf2, dir, Seq("events"))
+    // A stale listing would name the deleted files (FileNotFoundException)
+    // or count the old rows.
+    assert(full > 100)
+    assert(LogStore.topic(spark, dir, "events").count() === 100)
+    assert(Tables.resolvedPaths(spark).count(_ == s"$dir/events") === 1,
+      "the superseded entry is dropped")
   }
 }

@@ -114,6 +114,39 @@ class HttpServiceSpec extends AnyFunSuite {
     } finally fsvc.stop()
   }
 
+  test("follow: a client leaving a quiet topic stops the stream within seconds (L4)") {
+    // No record carries this key, so the stream never writes a record: the
+    // departure can only surface through the keep-alive writes.
+    val fsvc = new HttpService(spark, port = 0,
+      graft.core.Config.Defaults.copy(stopConsumersAfterNSeconds = 600)).start()
+    def following = spark.streams.active.exists(q =>
+      Option(q.name).exists(_.startsWith("graft-follow")))
+    try {
+      val sock = new java.net.Socket("localhost", fsvc.boundPort)
+      sock.setSoTimeout(60000)
+      sock.getOutputStream.write((s"GET /search?bootstrap-servers=${TestSpark.Sf}" +
+        "&topics=events&key-regex=no-such-key&follow HTTP/1.1\r\nHost: localhost\r\n\r\n")
+        .getBytes("UTF-8"))
+      val in = sock.getInputStream
+      val seen = new StringBuilder
+      val buf = new Array[Byte](256)
+      while (!seen.toString.contains("pioneer")) {
+        val n = in.read(buf)
+        assert(n > 0, s"response ended early: $seen")
+        seen.append(new String(buf, 0, n, "UTF-8"))
+      }
+      assert(seen.toString.startsWith("HTTP/1.1 200"), seen.toString)
+      // The pioneer is written before the query starts.
+      val started = System.nanoTime() + 30L * 1000000000L
+      while (!following && System.nanoTime() < started) Thread.sleep(50)
+      assert(following, "the follow stream is running before the client leaves")
+      sock.close()
+      val until = System.nanoTime() + 10L * 1000000000L
+      while (following && System.nanoTime() < until) Thread.sleep(100)
+      assert(!following, "the stream outlived its client by 10 s")
+    } finally fsvc.stop()
+  }
+
   test("/search with bad args → 400 error contract (C4)") {
     val (status, body) = get("/search?topics=events")
     assert(status == 400)
