@@ -12,10 +12,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Spark mapping: run the query inside a job group and cancel the group
   * from a timer — `interruptOnCancel` interrupts running tasks, so even a
-  * mid-stage query dies promptly. This also gives L4 (client cancel): the
-  * HTTP layer calls [[cancel]] on a broken pipe instead of letting the
-  * scan run to completion like the reference does (a known inefficiency
-  * there, `core.clj:85-87`).
+  * mid-stage query dies promptly; the group's later jobs fail at
+  * submission, so a stream that runs one job per partition also stops
+  * when the deadline falls between two of them. This also gives L4
+  * (client cancel): the HTTP layer calls [[cancel]] on a broken pipe
+  * instead of letting the scan run to completion like the reference does
+  * (a known inefficiency there, `core.clj:85-87`).
   */
 object Deadline {
   val DefaultSeconds = 86400
@@ -23,7 +25,7 @@ object Deadline {
   private val ids = new AtomicInteger()
 
   /** Run `body` with a hard wall-clock deadline; on expiry the job group
-    * is cancelled and the running action throws SparkException. */
+    * is cancelled and the running or next action throws SparkException. */
   def withDeadline[T](spark: SparkSession, seconds: Int = DefaultSeconds)(body: => T): T =
     withDeadlineGroup(spark, seconds)(_ => body)
 
@@ -38,7 +40,7 @@ object Deadline {
     val timer = new Thread(() => {
       try {
         Thread.sleep(seconds * 1000L)
-        sc.cancelJobGroup(group)
+        sc.cancelJobGroupAndFutureJobs(group)
       } catch { case _: InterruptedException => () }
     }, group)
     timer.setDaemon(true)
@@ -52,5 +54,5 @@ object Deadline {
 
   /** L4: cancel the group owning the current thread's jobs (client gone). */
   def cancel(spark: SparkSession, group: String): Unit =
-    spark.sparkContext.cancelJobGroup(group)
+    spark.sparkContext.cancelJobGroupAndFutureJobs(group)
 }

@@ -1,9 +1,17 @@
 package graft.render
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
+import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** The reference's chunked JSON-array output format (S6/P7):
   *
@@ -17,8 +25,8 @@ import org.apache.spark.sql.DataFrame
   * try-parse-JSON record semantic (`search.clj:44-66`): `"107"` becomes the
   * number 107, `"{\"k\":1}"` becomes a nested object, `"k0"` stays a string.
   *
-  * Driver-side render: `toLocalIterator` holds one partition at a time, so
-  * the result set is never materialized on the driver — the same
+  * Driver-side render: [[rows]] streams the result one partition at a
+  * time, so the result set is never materialized on the driver — the same
   * no-server-side-buffering property as the reference's streaming loop.
   */
 object JsonArrayRender {
@@ -35,7 +43,7 @@ object JsonArrayRender {
     try Option(mapper.readTree(text)).filter(!_.isMissingNode) // readTree("") is Missing, not an error
     catch { case _: Exception => None }
 
-  /** Render one record's compact JSON (a `df.toJSON` row) as the pretty,
+  /** Render one record's compact JSON (a [[rows]] row) as the pretty,
     * comma-prefixed chunk the reference emits. */
   def renderRecord(rowJson: String): String = {
     val node = mapper.readTree(rowJson)
@@ -63,12 +71,75 @@ object JsonArrayRender {
   def renderVerbatim(df: DataFrame, out: String => Unit): Unit =
     renderWith(df, out, row => ", " + row)
 
+  /** The record chunks of `df` without the array framing: the body of one
+    * follow micro-batch, whose array stays open across batches. */
+  def renderRecords(df: DataFrame, out: String => Unit): Unit =
+    rows(df).foreach(row => out(renderRecord(row)))
+
   private def renderWith(df: DataFrame, out: String => Unit,
       perRecord: String => String): Unit = {
     out("[")
     out(Pioneer)
-    val it = df.toJSON.toLocalIterator()
-    while (it.hasNext) out(perRecord(it.next()))
+    rows(df).foreach(row => out(perRecord(row)))
     out("]")
+  }
+
+  /** The rows of `df` as compact JSON text (`to_json` over all columns,
+    * built in the plan), streamed with these invariants:
+    *  - partition order: partition p's rows, in their in-partition order,
+    *    come before partition p+1's, so a global sort streams sorted;
+    *  - one job per partition, each a single task, run one at a time on
+    *    the calling thread — in its job group, so a deadline or a client
+    *    cancel kills the running job and fails any later one;
+    *  - one partition held at a time: a job's rows arrive as one
+    *    compressed byte array and are decoded as they are consumed, and
+    *    the next job starts only when the consumer asks for its rows (a
+    *    consumer that stops, e.g. on a broken pipe, starts no further
+    *    job).
+    * The SQL-execution scope covers planning and executing the plan up to
+    * its final stage (AQE's stage jobs), not the per-partition jobs. */
+  def rows(df: DataFrame): Iterator[String] = {
+    val json = df.select(to_json(struct(col("*"))))
+    val qe = json.queryExecution
+    val rdd = SQLExecution.withNewExecutionId(qe, Some("render"))(qe.executedPlan.execute())
+    Iterator.range(0, rdd.getNumPartitions).flatMap { p =>
+      decode(rdd.sparkContext.runJob(rdd, PartitionJson, Seq(p)).head)
+    }
+  }
+
+  private def decode(bytes: Array[Byte]): Iterator[String] = new Iterator[String] {
+    private val in = new DataInputStream(new LZ4CompressionCodec(SparkEnv.get.conf)
+      .compressedInputStream(new ByteArrayInputStream(bytes)))
+    private var len = in.readInt()
+    def hasNext: Boolean = len >= 0
+    def next(): String = {
+      if (len < 0) throw new NoSuchElementException("end of partition")
+      val buf = new Array[Byte](len)
+      in.readFully(buf)
+      len = in.readInt()
+      if (len < 0) in.close()
+      new String(buf, StandardCharsets.UTF_8)
+    }
+  }
+}
+
+/** The per-partition job of [[JsonArrayRender.rows]]: one partition's JSON
+  * texts, each as a length-prefixed UTF-8 string and `-1` after the last,
+  * LZ4-compressed. A top-level object, not a closure: `runJob` neither
+  * runs the closure cleaner nor a serialization check on it. */
+private[render] object PartitionJson
+    extends ((TaskContext, Iterator[InternalRow]) => Array[Byte]) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(
+      new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(bytes))
+    rows.foreach { row =>
+      val text = row.getUTF8String(0)
+      out.writeInt(text.numBytes)
+      text.writeTo(out)
+    }
+    out.writeInt(-1)
+    out.close()
+    bytes.toByteArray
   }
 }

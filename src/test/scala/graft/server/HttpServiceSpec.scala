@@ -257,6 +257,9 @@ class HttpServiceSpec extends AnyFunSuite {
     val set = (0 until names.size()).map(names.get(_).asText()).toSet
     assert(set.contains("q01_scan") &&
       set.contains("q62_containment_stratified"), set.take(5).toString)
+    // Compact, in sorted order: the bytes a per-request mapper wrote.
+    assert(body == graft.SparkEntry.queries.keys.toSeq.sorted
+      .map(n => s""""$n"""").mkString("""{"queries":[""", ",", "]}"))
   }
 
   test("/pipeline argument errors reach the 400 channel pre-commit (C4)") {
