@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Per-query failures are NOT swallowed into a
@@ -34,17 +33,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Sidecar tables (the q67 stored-index fixture) land here rather
-      // than under a cwd-relative spark-warehouse.
-      .config("spark.sql.warehouse.dir", "/tmp/graft-bench-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Sidecar tables (the q67 stored-index fixture) land here rather
+    // than under a cwd-relative spark-warehouse.
+    val spark = GraftSession.local(cpus, "/tmp/graft-bench-warehouse")
     // Untimed warmup: JVM/codegen/parquet-reader initialization would
     // otherwise be charged to whichever query runs first.
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

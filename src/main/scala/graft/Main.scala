@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.QueryOptions
 import graft.log.LogQuery
 import graft.render.JsonArrayRender
@@ -20,14 +18,8 @@ import graft.server.HttpService
 object Main {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Main (cli|server) [--opts ...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "spark-warehouse")
     args.head match {
       case "cli" if args.contains("--help") =>
         // The reference prints the option summary on --help (`core.clj:170-172`).

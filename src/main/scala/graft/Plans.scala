@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for the plan-critical queries
   * (the shapes PlanAuditSpec asserts). Usage:
   *   runMain graft.Plans [sfDir] > PLANS.txt
@@ -43,16 +41,9 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // q67 writes its sidecar tables via saveAsTable — keep them out of
-      // a cwd-relative spark-warehouse (the Bench/Verify convention).
-      .config("spark.sql.warehouse.dir", "/tmp/graft-plans-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // q67 writes its sidecar tables via saveAsTable — keep them out of
+    // a cwd-relative spark-warehouse (the Bench/Verify convention).
+    val spark = GraftSession.local("4", "/tmp/graft-plans-warehouse")
     spark.sparkContext.setLogLevel("ERROR")
     def dump(name: String, suffix: String = ""): Unit = {
       println(s"\n===================== $name$suffix =====================")

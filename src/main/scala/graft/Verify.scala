@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Sidecar tables (the q67 stored-index fixture) land here rather
-      // than under a cwd-relative spark-warehouse.
-      .config("spark.sql.warehouse.dir", "/tmp/graft-verify-warehouse")
-      .config("spark.ui.enabled", "false")
-      // Opt-in record-log cache: ~15 conformance queries share one scan of
-      // the synthesized log at sf0.01 (general path stays uncached).
-      .config("spark.graft.cacheRecordLog", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Sidecar tables (the q67 stored-index fixture) land here rather
+    // than under a cwd-relative spark-warehouse.
+    val spark = GraftSession.local(cpus, "/tmp/graft-verify-warehouse")
+    // Opt-in record-log cache: ~15 conformance queries share one scan of
+    // the synthesized log at sf0.01 (general path stays uncached).
+    spark.conf.set("spark.graft.cacheRecordLog", "true")
     new java.io.File(outDir).mkdirs()
     var failed = 0
     // Local-iteration filter (driver sets nothing → full run): a

@@ -157,9 +157,24 @@ object Materialize {
     * block only. */
   def collecting[T](body: => T): (T, Seq[Dataset[_]]) = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    (collectInto(buf)(body), buf.toSeq)
+  }
+
+  /** Run `body` in a [[collecting]] scope and release exactly the frames
+    * it registered, whether it returns or throws — the per-micro-batch
+    * scope of [[graft.streaming.MicroBatch.each]]. (`collecting` alone
+    * loses its frames when `body` throws, leaving them cached in the
+    * long-lived session.) */
+  private[graft] def releasing[T](body: => T): T = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    try collectInto(buf)(body) finally release(buf.toSeq)
+  }
+
+  private def collectInto[T](
+      buf: scala.collection.mutable.ArrayBuffer[Dataset[_]])(body: => T): T = {
     val prev = collector.get()
     collector.set(buf)
-    try (body, buf.toSeq)
+    try body
     finally {
       if (prev == null) collector.remove() else collector.set(prev)
     }

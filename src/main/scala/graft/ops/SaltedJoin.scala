@@ -70,7 +70,8 @@ object SaltedJoin {
 
   /** [[autoJoin]] against a SUPPLIED `(key, salts)` profile — the
     * deployment form (q153): the profile is measured once (or kept
-    * current by a [[graft.streaming.StreamSkew]] counter stream) and
+    * current by a per-micro-batch `(key, n)` counter stream summed into
+    * [[SkewReport.profileFromCounts]], as `StreamSkewSpec` runs it) and
     * PERSISTED beside the table, so repeated runs of the same join skip
     * the two profile aggregations entirely. Correct under ANY profile
     * with fan-outs ≥ 1 — duplicate keys fold to their max fan-out

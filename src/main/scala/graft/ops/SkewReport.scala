@@ -34,7 +34,7 @@ object SkewReport {
   /** The counter→profile half of [[keyProfile]], split out so MERGED
     * counters can feed it too (the streaming monitor sums per-batch
     * (key, n) rows — counts are additive, so the profile of the union
-    * is the profile of the summed counters; StreamSkew pins it).
+    * is the profile of the summed counters; StreamSkewSpec pins it).
     * `counts` is a (key, n) frame; rows for the same key are summed. */
   def profileFromCounts(counts: DataFrame,
       targetRowsPerTask: Long): DataFrame = {

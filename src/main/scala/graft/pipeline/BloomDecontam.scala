@@ -109,7 +109,7 @@ object BloomDecontam {
   /** The filter as a DEPLOYMENT ARTIFACT: [[Slices]] packed bit arrays
     * (2^[[SliceBits]] bits = 2048 longs each, 48 KiB total), built once
     * from the eval suite. This is the form the streaming admission
-    * ([[graft.streaming.StreamBloom]]) freezes at stream start — and the
+    * (`StreamBloomSpec`) freezes at stream start — and the
     * zero-join batch probe [[bloomReportWith]] consumes: where
     * [[bloomReport]] carries the set bits as a broadcast join relation,
     * the packed form rides the plan as three LITERAL arrays, so the

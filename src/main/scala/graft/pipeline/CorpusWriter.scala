@@ -840,8 +840,9 @@ object CorpusWriter {
     * Ordering note: admission of a batch and its landing are separate
     * steps by design (admit first, land the keepers) — the sidecar's
     * membership mutates only here, which is what keeps
-    * [[graft.streaming.StreamContainment]]'s per-batch admission
-    * arrival-order independent. */
+    * per-batch admission ([[MinHashDedup.incrementalContainmentPairs]]
+    * over each micro-batch, `StreamContainmentSpec`) arrival-order
+    * independent. */
   /** Rewrite one bucketed sidecar table in place, keeping its bucket
     * spec — answer-invisible maintenance (VERDICT r14 item 3). Every
     * bucketed APPEND ([[appendToStratifiedIndex]], [[appendToGramIndex]])
@@ -1408,31 +1409,12 @@ object CorpusWriter {
     val affected = spark.table(table)
       .join(ids, Seq("vec_id"), "left_semi")
       .select("cell").distinct().collect().map(_.getLong(0)).toSeq
-    if (affected.nonEmpty) {
-      val swap = s"${table}__retire"
-      dropOrphanedLocation(spark, swap)
-      spark.table(table)
-        .filter(col("cell").isin(affected: _*))
-        .join(ids, Seq("vec_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite).format("parquet")
-        .saveAsTable(swap)
-      val keptCells = spark.table(swap)
-        .select("cell").distinct().collect().map(_.getLong(0)).toSet
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        // Positional insert: the swap table carries the member table's
-        // own schema (partition column last), so the columns line up.
-        spark.table(swap).write.mode(SaveMode.Overwrite).insertInto(table)
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      affected.filterNot(keptCells).foreach { c =>
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (cell = $c)")
-      }
-      spark.sql(s"DROP TABLE $swap")
-    }
+    if (affected.nonEmpty)
+      overwriteStaleCells(spark, table,
+        spark.table(table)
+          .filter(col("cell").isin(affected: _*))
+          .join(ids, Seq("vec_id"), "left_anti"),
+        affected)
   }
 
   /** [[retireFromIvfIndex]] verbatim — the IVF-PQ member table shares

@@ -60,8 +60,8 @@ object Funnel {
 
   /** The ROW-LOCAL stage flags of [[curationFunnel]] — everything but
     * the cross-document canonical stage — as (name, predicate) pairs in
-    * pipeline order, shared by the batch funnel and
-    * [[graft.streaming.StreamFunnel]] so the two compute THE SAME
+    * pipeline order, shared by the batch funnel and its per-micro-batch
+    * form (`StreamFunnelSpec`) so the two compute THE SAME
     * predicates (reused verbatim from q35/q44/q46). Row-locality is
     * what makes their funnel counters ADDITIVE across any batch split. */
   def rowLocalStageCols(textCol: String): Seq[(String, Column)] = {

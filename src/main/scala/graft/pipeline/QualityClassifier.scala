@@ -99,7 +99,7 @@ object QualityClassifier {
   /** Train only: the final weight vector (d = [[Dim]] longs), feature
     * cache released before returning — for deployments that train once
     * on a labeled corpus and score elsewhere ([[scoreWith]], the
-    * [[graft.streaming.StreamQuality]] micro-batch form). */
+    * micro-batch form `StreamQualitySpec` runs). */
   def train(docs: DataFrame, idCol: String, langCol: String,
       textCol: String, nCharsCol: String, posLang: String,
       rounds: Int): Array[Long] = {

@@ -520,7 +520,7 @@ object RegexIndex {
   }
 
   /** BATCHED regex search — N patterns against one index scan (the
-    * q190/BatchScaleProbe |Q|-flat discipline at regex grain: a
+    * q190 |Q|-flat discipline at regex grain: a
     * takedown sweep or PII audit carries hundreds of patterns, and N
     * independent probes would re-read the shared gram slices N times).
     * ONE bucket-pruned scan restricted to the union of every pattern's

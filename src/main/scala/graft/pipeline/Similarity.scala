@@ -216,7 +216,7 @@ object Similarity {
 
   /** The two-frame core of [[semanticDecontam]]: annotate every `corpus`
     * vector with its nearest `evalVecs` neighbor. Separate frames so the
-    * streaming admission form ([[graft.streaming.StreamSemantic]]) can
+    * streaming admission form (`StreamSemanticSpec`) can
     * pass each micro-batch as the corpus against a standing eval set —
     * the single-frame overload above is this with a predicate split. */
   def semanticDecontamAgainst(corpus: DataFrame, evalVecs: DataFrame,

@@ -73,7 +73,7 @@ object SourceDrift {
       .orderBy("src_a", "src_b")
   }
 
-  /** The corpus reference distribution for [[graft.streaming.StreamDrift]]:
+  /** The corpus reference distribution for [[driftFromReference]]:
     * the top-`v` terms with their ppm frequencies against the TOTAL
     * corpus token count (the [[termDrift]] normalization). A `v`-row
     * bounded driver collect — the train-time artifact the stream

@@ -36,7 +36,7 @@ import graft.ops.Materialize
   * higher-order `transform` (no second tokenize pass). The model is one
   * slim `(level, gram, c)` frame — COUNTS, which are additive, so the
   * stored sidecar ([[CorpusWriter.writeLmModel]]) supports plain APPEND
-  * landings with a sum-fold on read (the StreamSkew/HLL register
+  * landings with a sum-fold on read (the skew-counter/HLL register
   * discipline: merge is the aggregation itself). Scoring tokenizes the
   * scored corpus once into (doc, trigram) counts and runs five
   * vocabulary-keyed equi-joins (tri, both bigram roles, two unigram

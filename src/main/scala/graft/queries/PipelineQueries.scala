@@ -1045,7 +1045,7 @@ object PipelineQueries {
     }),
 
     // Batched regex sweep (r20): N patterns against ONE index scan —
-    // the |Q|-flat discipline (q190/BatchScaleProbe) at regex grain. A
+    // the |Q|-flat discipline (q190) at regex grain. A
     // takedown or PII sweep carries many patterns; N independent
     // probes would re-read the shared gram slices N times. One scan
     // restricted to the union of every pattern's trigrams

@@ -119,9 +119,9 @@ final class HttpService(spark: SparkSession, port: Int,
   /** `--follow` over HTTP: the reference streams the unbounded tail
     * through the same chunked JSON-array response as a bounded search
     * (`search.clj:103-122`, `core.clj:98-105`). Spark binding: a
-    * Structured Streaming query whose `foreachBatch` writes each
-    * micro-batch through the same [[JsonArrayRender]] record chunks. The
-    * array never closes on its own; termination is
+    * Structured Streaming query ([[graft.streaming.MicroBatch.each]])
+    * that writes each micro-batch through the same [[JsonArrayRender]]
+    * record chunks. The array never closes on its own; termination is
     *  - L3: the wall-clock kill switch (`stop-consumers-after-n-seconds`)
     *    expiring the `awaitTermination` wait, after which the array is
     *    closed cleanly — the reference's forgotten-consumer guard; or
@@ -154,16 +154,13 @@ final class HttpService(spark: SparkSession, port: Int,
     try {
       out("[")
       out(JsonArrayRender.Pioneer)
-      val q = df.writeStream
+      val q = graft.streaming.MicroBatch.each(df) { (batch, _) =>
+        JsonArrayRender.renderRecords(
+          batch.sortWithinPartitions("type", "topic", "partition", "offset"), out)
+      }
         .queryName(s"graft-follow-${HttpService.followIds.incrementAndGet()}")
-        .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(
           HttpService.FollowIntervalMs))
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // foreachBatch runs driver-side on the stream thread.
-          JsonArrayRender.renderRecords(
-            batch.sortWithinPartitions("type", "topic", "partition", "offset"), out)
-        }
         .start()
       try {
         // L3: the deadline expiring with the tail still alive is the kill

@@ -9,8 +9,8 @@ import graft.pipeline.HeavyHitters
 
 /** Streaming heavy hitters — [[HeavyHitters]] (q98) composed with the
   * streaming front door, the SIXTH batch/streaming duality (exact dedup
-  * q56/StreamDedup, containment q67/StreamContainment, semantic q73/
-  * StreamSemantic, quality q77/StreamQuality, Bloom q71/StreamBloom).
+  * q56/StreamDedup, then containment q67, semantic q73, quality q77 and
+  * Bloom q71, each its batch operator run through [[MicroBatch.each]]).
   *
   * Ingest never stops, so "which n-grams are trending past 1/k of the
   * stream" must be answerable WITHOUT replaying history. The state is a
@@ -77,25 +77,22 @@ object StreamHitters {
     * merge into `summary`, then `sink` observes (summary, batchId).
     * The caller sets trigger/queryName and calls `.start()`. */
   def admit(docs: DataFrame, textCol: String, summary: Summary,
-      n: Int = 2)(sink: (Summary, Long) => Unit): DataStreamWriter[Row] = {
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GraftFunctions.register(batch.sparkSession)
-        import batch.sparkSession.implicits._
-        val toks = batch.select(
-            explode_outer(GraftFunctions.wordGrams(col(textCol), n)).as("term"))
-          .filter(col("term").isNotNull)
-        // one distributed pass; ≤ partitions·m rows reach the driver
-        val parts = HeavyHitters.partitionSummaries(toks.as[String], summary.m)
-          .groupBy("term").agg(sum("residual").as("residual"))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val batchTokens = batch.select(
-          sum(size(GraftFunctions.wordGrams(col(textCol), n))).cast("long"))
-          .collect()(0)
-        summary.merge(parts.toSeq,
-          if (batchTokens.isNullAt(0)) 0L else batchTokens.getLong(0))
-        sink(summary, batchId)
-      }
-  }
+      n: Int = 2)(sink: (Summary, Long) => Unit): DataStreamWriter[Row] =
+    MicroBatch.each(docs) { (batch, batchId) =>
+      GraftFunctions.register(batch.sparkSession)
+      import batch.sparkSession.implicits._
+      val toks = batch.select(
+          explode_outer(GraftFunctions.wordGrams(col(textCol), n)).as("term"))
+        .filter(col("term").isNotNull)
+      // one distributed pass; ≤ partitions·m rows reach the driver
+      val parts = HeavyHitters.partitionSummaries(toks.as[String], summary.m)
+        .groupBy("term").agg(sum("residual").as("residual"))
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val batchTokens = batch.select(
+        sum(size(GraftFunctions.wordGrams(col(textCol), n))).cast("long"))
+        .collect()(0)
+      summary.merge(parts.toSeq,
+        if (batchTokens.isNullAt(0)) 0L else batchTokens.getLong(0))
+      sink(summary, batchId)
+    }
 }

@@ -54,10 +54,8 @@ object StreamHll {
   def monitor(docs: DataFrame, textCol: String, sketch: Sketch,
       n: Int = 3)(
       sink: (Sketch, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sketch.merge(HyperLogLog.sketchOf(batch, textCol, n))
-        sink(sketch, batchId)
-      }
+    MicroBatch.each(docs) { (batch, batchId) =>
+      sketch.merge(HyperLogLog.sketchOf(batch, textCol, n))
+      sink(sketch, batchId)
+    }
 }

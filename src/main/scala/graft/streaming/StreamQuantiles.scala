@@ -57,11 +57,9 @@ object StreamQuantiles {
     * element-wise addition. */
   def monitor(docs: DataFrame, valueCol: String, g: Grid)(
       sink: (Array[Long], Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(histogram(batch, valueCol, g), batchId)
-      }
+    MicroBatch.each(docs) { (batch, batchId) =>
+      sink(histogram(batch, valueCol, g), batchId)
+    }
 
   /** The quantile bracket for `p` under the engine's selection rule
     * (rank = floor(p·(n−1))): the containing bucket's [lo, hi) bounds.

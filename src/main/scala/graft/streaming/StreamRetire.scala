@@ -56,13 +56,11 @@ object StreamRetire {
     * `ids` is a streaming DataFrame carrying `idCol`. */
   def intoTombstones(spark: SparkSession, ids: DataFrame, idCol: String,
       table: String)(onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    ids.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          CorpusWriter.appendTombstones(spark, table, batch, idCol)
-        onBatch(batchId)
-      }
+    MicroBatch.each(ids) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        CorpusWriter.appendTombstones(spark, table, batch, idCol)
+      onBatch(batchId)
+    }
 
   /** Configure (not start) the LM delete stream: each micro-batch of
     * retired TRAINING DOCS subtract-lands its counts, idempotently per
@@ -71,20 +69,15 @@ object StreamRetire {
       table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          val (_, frames) = graft.ops.Materialize.collecting {
-            CorpusWriter.retireFromLmModel(batch, textCol, table,
-              src = s"$srcPrefix:$batchId")
-          }
-          graft.ops.Materialize.release(frames)
-        }
-        onBatch(batchId)
+    MicroBatch.each(docs) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        CorpusWriter.retireFromLmModel(batch, textCol, table,
+          src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** Configure (not start) the gram-index delete stream: each
     * micro-batch of retired DOCS subtract-lands its gram refcounts —
@@ -95,20 +88,15 @@ object StreamRetire {
       table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          val (_, frames) = graft.ops.Materialize.collecting {
-            CorpusWriter.retireFromGramIndex(batch, textCol, table,
-              src = s"$srcPrefix:$batchId")
-          }
-          graft.ops.Materialize.release(frames)
-        }
-        onBatch(batchId)
+    MicroBatch.each(docs) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        CorpusWriter.retireFromGramIndex(batch, textCol, table,
+          src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** [[fromGramIndex]] at frame grain — the streaming TAKEDOWN path
     * for the content-ID reference set: each micro-batch of retired
@@ -119,19 +107,17 @@ object StreamRetire {
       table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    assets.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          import graft.pipeline.Multimodal.assetEnc
-          graft.pipeline.Multimodal.retireFromFrameIndex(
-            batch.as[graft.pipeline.Multimodal.MediaAsset], table,
-            src = s"$srcPrefix:$batchId")
-        }
-        onBatch(batchId)
+    MicroBatch.each(assets) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        import graft.pipeline.Multimodal.assetEnc
+        graft.pipeline.Multimodal.retireFromFrameIndex(
+          batch.as[graft.pipeline.Multimodal.MediaAsset], table,
+          src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** [[fromFrameIndex]] at SHINGLE grain — the streaming takedown for
     * the shift-tolerant content-ID reference set. */
@@ -139,19 +125,17 @@ object StreamRetire {
       table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    assets.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          import graft.pipeline.Multimodal.assetEnc
-          graft.pipeline.Multimodal.retireFromShingleIndex(
-            batch.as[graft.pipeline.Multimodal.MediaAsset], table,
-            src = s"$srcPrefix:$batchId")
-        }
-        onBatch(batchId)
+    MicroBatch.each(assets) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        import graft.pipeline.Multimodal.assetEnc
+        graft.pipeline.Multimodal.retireFromShingleIndex(
+          batch.as[graft.pipeline.Multimodal.MediaAsset], table,
+          src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** The postings-index delete stream (r19): each micro-batch of
     * retired DOCS subtract-lands its postings, lengths, and stats —
@@ -162,25 +146,20 @@ object StreamRetire {
       idCol: String, textCol: String, table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // The postings landing commits THREE sub-tables (stats last)
-          // — gate on all three, or a retire could subtract stats a
-          // mid-crash landing never added. One tag collect, three
-          // probes.
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLandedAll(spark,
-              Seq(table, s"${table}_lens", s"${table}_stats"), batch, _))
-          val (_, frames) = graft.ops.Materialize.collecting {
-            graft.pipeline.Bm25.retireFromPostingsIndex(batch, idCol,
-              textCol, table, src = s"$srcPrefix:$batchId")
-          }
-          graft.ops.Materialize.release(frames)
-        }
-        onBatch(batchId)
+    MicroBatch.each(docs) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        // The postings landing commits THREE sub-tables (stats last)
+        // — gate on all three, or a retire could subtract stats a
+        // mid-crash landing never added. One tag collect, three
+        // probes.
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLandedAll(spark,
+            Seq(table, s"${table}_lens", s"${table}_stats"), batch, _))
+        graft.pipeline.Bm25.retireFromPostingsIndex(batch, idCol,
+          textCol, table, src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** The positional-index delete stream (r20): each micro-batch of
     * retired DOCS subtract-lands its (term, doc_id, pos) occurrence
@@ -192,17 +171,15 @@ object StreamRetire {
       idCol: String, textCol: String, table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          graft.pipeline.PhraseIndex.retireFromPhraseIndex(batch, idCol,
-            textCol, table, src = s"$srcPrefix:$batchId")
-        }
-        onBatch(batchId)
+    MicroBatch.each(docs) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        graft.pipeline.PhraseIndex.retireFromPhraseIndex(batch, idCol,
+          textCol, table, src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** The regex-trigram-index delete stream (r20): each micro-batch of
     * retired DOCS subtract-lands its (gram, doc_id) presence refcounts
@@ -219,35 +196,28 @@ object StreamRetire {
       idCol: String, textCol: String, table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          graft.pipeline.RegexIndex.retireFromRegexIndex(batch, idCol,
-            textCol, table, src = s"$srcPrefix:$batchId")
-        }
-        onBatch(batchId)
+    MicroBatch.each(docs) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        graft.pipeline.RegexIndex.retireFromRegexIndex(batch, idCol,
+          textCol, table, src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 
   /** [[fromGramIndex]] at winnowed-fingerprint grain. */
   def fromWinnowIndex(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, table: String, srcPrefix: String,
       gateOnLandSrcCol: Option[String] = None)(
       onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          gateOnLandSrcCol.foreach(
-            CorpusWriter.requireLanded(spark, table, batch, _))
-          val (_, frames) = graft.ops.Materialize.collecting {
-            CorpusWriter.retireFromWinnowIndex(batch, idCol, textCol, table,
-              src = s"$srcPrefix:$batchId")
-          }
-          graft.ops.Materialize.release(frames)
-        }
-        onBatch(batchId)
+    MicroBatch.each(docs) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        gateOnLandSrcCol.foreach(
+          CorpusWriter.requireLanded(spark, table, batch, _))
+        CorpusWriter.retireFromWinnowIndex(batch, idCol, textCol, table,
+          src = s"$srcPrefix:$batchId")
       }
+      onBatch(batchId)
+    }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query slice of Verify: `runMain graft.tools.DumpQuery <names>
   * [sfDir] [outDir]` dumps each named query's result parquet plus an
   * oracle_sql.json restricted to those names, so
@@ -15,15 +13,7 @@ object DumpQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 2) args(2) else "/tmp/graft_out_one"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-verify-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, "/tmp/graft-verify-warehouse")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val t0 = System.nanoTime()

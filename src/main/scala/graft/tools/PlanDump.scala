@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-artifact dumper: `runMain graft.tools.PlanDump <names> <suffix>
   * [sfDir] [outDir]` writes `outDir/<name><suffix>.txt` holding each
   * named query's `explain("formatted")` — the before/after evidence the
@@ -16,15 +14,7 @@ object PlanDump {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 3) args(3) else "/root/repo/plans/r21"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-plandump-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, "/tmp/graft-plandump-warehouse")
     val archiveDir = s"/tmp/graft-bench-archive-${Integer.toHexString(sfDir.hashCode)}"
     graft.log.LogStore.ensureMaterialized(spark, sfDir, archiveDir)
     spark.conf.set("spark.graft.recordSource", "archive")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,15 +17,7 @@ object ProfileQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-profile-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, "/tmp/graft-profile-warehouse")
     val archiveDir = s"/tmp/graft-bench-archive-${Integer.toHexString(sfDir.hashCode)}"
     graft.log.LogStore.ensureMaterialized(spark, sfDir, archiveDir)
     spark.conf.set("spark.graft.recordSource", "archive")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the trigram regex index (q194 family): times the
@@ -19,15 +18,7 @@ object RegexProbe {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft-sf-big"
     val reps = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-regexprobe-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, "/tmp/graft-regexprobe-warehouse")
     val docs = graft.core.Tables.load(spark, sfDir, "documents")
     val tbl = "graft_regexprobe_idx"
     // The q194 pattern matches ~59% of the replica corpus (every doc's

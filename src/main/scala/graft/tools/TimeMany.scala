@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-query timing probe for the SCALING.md core-scaling rows:
   * `runMain graft.tools.TimeMany <q1,q2,...> [sfDir] [passes]` runs the
   * named registered queries with the Bench's methodology (untimed
@@ -17,15 +15,7 @@ object TimeMany {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-timemany-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, "/tmp/graft-timemany-warehouse")
     val archiveDir = s"/tmp/graft-bench-archive-${Integer.toHexString(sfDir.hashCode)}"
     graft.log.LogStore.ensureMaterialized(spark, sfDir, archiveDir)
     spark.conf.set("spark.graft.recordSource", "archive")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query iteration probe: `runMain graft.tools.TimeQuery <name> [sfDir]
   * [reps]` warms the JVM, runs ONE registered query `reps` times against
   * the archived record layout (the bench's configuration) and prints each
@@ -14,16 +12,8 @@ object TimeQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // q67 sidecar tables land here (the Bench/Verify convention).
-      .config("spark.sql.warehouse.dir", "/tmp/graft-timequery-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // q67 sidecar tables land here (the Bench/Verify convention).
+    val spark = graft.GraftSession.local(cpus, "/tmp/graft-timequery-warehouse")
     val archiveDir = s"/tmp/graft-bench-archive-${Integer.toHexString(sfDir.hashCode)}"
     graft.log.LogStore.ensureMaterialized(spark, sfDir, archiveDir)
     spark.conf.set("spark.graft.recordSource", "archive")

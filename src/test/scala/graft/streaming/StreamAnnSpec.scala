@@ -39,10 +39,12 @@ class StreamAnnSpec extends AnyFunSuite {
       val parts = qRows.grouped(2).toSeq // three 2-query micro-batches
       val got = scala.collection.mutable.ArrayBuffer.empty[Rec]
       val input = MemoryStream[(Long, Seq[Double])]
-      val q = StreamAnn.probe(spark,
-          input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          tbl, nprobe = 2, topK = 5) {
-          (rep, _) => got ++= rows(rep)
+      val q = MicroBatch.each(input.toDF().toDF("vec_id", "embedding")) {
+          (batch, _) =>
+            // The index path `require`s a nonempty batch of queries.
+            if (!batch.isEmpty)
+              got ++= rows(Clustering.ivfTopKFromIndex(spark, tbl, batch,
+                "vec_id", "embedding", nprobe = 2, topK = 5))
         }
         .queryName("stream_ann_fixture_test")
         .start()

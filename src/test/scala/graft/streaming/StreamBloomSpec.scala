@@ -47,9 +47,10 @@ class StreamBloomSpec extends AnyFunSuite {
     val parts = docRows.grouped(math.max(1, (docRows.length + 2) / 3)).toSeq
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Rec)]
     val input = MemoryStream[(Long, String)]
-    val q = StreamBloom.admit(input.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", n = 4, packed) {
-        (report, batchId) => rows(report).foreach(r => got += batchId -> r)
+    val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+        (batch, batchId) =>
+          rows(graft.pipeline.BloomDecontam.bloomReportWith(batch, "doc_id",
+            "text", n = 4, packed)).foreach(r => got += batchId -> r)
       }
       .queryName("stream_bloom_fixture_test")
       .start()

@@ -21,6 +21,13 @@ class StreamContainmentSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getDouble(4))).toSet
 
+  /** One micro-batch's admission pairs against the stored sidecar. */
+  private def admit(batch: org.apache.spark.sql.DataFrame, tbl: String,
+      minCont: Double) =
+    graft.pipeline.MinHashDedup.incrementalContainmentPairs(
+      batch.sparkSession, tbl, batch, "doc_id", "text", minCont,
+      graft.pipeline.MinHashDedup.StrataSpan)
+
   private def released[T](body: => T): T = {
     val (out, frames) = graft.ops.Materialize.collecting(body)
     graft.ops.Materialize.release(frames)
@@ -54,9 +61,9 @@ class StreamContainmentSpec extends AnyFunSuite {
     val parts = incRows.grouped(math.max(1, (incRows.length + 2) / 3)).toSeq
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Pair)]
     val input = MemoryStream[(Long, String)]
-    val q = StreamContainment.admit(
-        input.toDF().toDF("doc_id", "text"), tbl, "doc_id", "text", 0.6) {
-        (pairs, batchId) => rows(pairs).foreach(p => admitted += batchId -> p)
+    val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+        (batch, batchId) =>
+          rows(admit(batch, tbl, 0.6)).foreach(p => admitted += batchId -> p)
       }
       .queryName("stream_containment_fixture_test")
       .start()
@@ -95,9 +102,8 @@ class StreamContainmentSpec extends AnyFunSuite {
 
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Pair]
     val input = MemoryStream[(Long, String)]
-    val q = StreamContainment.admit(
-        input.toDF().toDF("doc_id", "text"), tbl, "doc_id", "text", 0.9) {
-        (pairs, _) => rows(pairs).foreach(admitted += _)
+    val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+        (batch, _) => rows(admit(batch, tbl, 0.9)).foreach(admitted += _)
       }
       .queryName("stream_containment_gate_test")
       .start()

@@ -34,8 +34,11 @@ class StreamContentIdSpec extends AnyFunSuite {
     val parts = (0 until 3).map(r => rows.filter(_.asset_id % 3 == r))
     val got = scala.collection.mutable.ArrayBuffer.empty[String]
     val input = MemoryStream[Multimodal.MediaAsset]
-    val q = StreamContentId.probe(spark, input.toDF(), tbl, minShared = 2) {
-        (df, _) => got ++= df.collect().map(_.mkString("|"))
+    val q = MicroBatch.each(input.toDF()) { (batch, _) =>
+        if (!batch.isEmpty)
+          got ++= Multimodal.contentIdAgainstIndex(spark, tbl,
+            batch.as[Multimodal.MediaAsset], minShared = 2)
+            .collect().map(_.mkString("|"))
       }
       .queryName("stream_content_id_test")
       .start()
@@ -64,9 +67,11 @@ class StreamContentIdSpec extends AnyFunSuite {
     val parts = (0 until 3).map(r => rows.filter(_.asset_id % 3 == r))
     val got = scala.collection.mutable.ArrayBuffer.empty[String]
     val input = MemoryStream[Multimodal.MediaAsset]
-    val q = StreamContentId.probeShifted(spark, input.toDF(), tbl,
-        minShared = 2) {
-        (df, _) => got ++= df.collect().map(_.mkString("|"))
+    val q = MicroBatch.each(input.toDF()) { (batch, _) =>
+        if (!batch.isEmpty)
+          got ++= Multimodal.shiftContentIdAgainstIndex(spark, tbl,
+            batch.as[Multimodal.MediaAsset], minShared = 2)
+            .collect().map(_.mkString("|"))
       }
       .queryName("stream_shift_content_id_test")
       .start()

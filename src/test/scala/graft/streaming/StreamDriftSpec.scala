@@ -35,9 +35,9 @@ class StreamDriftSpec extends AnyFunSuite {
     val parts = docRows.grouped(math.max(1, (docRows.length + 2) / 3)).toSeq
     val got = scala.collection.mutable.Map.empty[Long, (Long, Long, Long)]
     val input = MemoryStream[(Long, String)]
-    val q = StreamDrift.monitor(
-        input.toDF().toDF("doc_id", "text"), "text", ref) {
-        (rep, batchId) => got(batchId) = report(rep)
+    val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+        (batch, batchId) =>
+          got(batchId) = report(SourceDrift.driftFromReference(batch, "text", ref))
       }
       .queryName("stream_drift_fixture_test")
       .start()

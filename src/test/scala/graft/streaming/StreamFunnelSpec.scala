@@ -37,12 +37,15 @@ class StreamFunnelSpec extends AnyFunSuite {
       math.max(1, (docRows.length + 2) / 3)).toSeq
     val acc = scala.collection.mutable.Map.empty[Key, (Long, Long)]
     val input = MemoryStream[(Long, String, String)]
-    val q = StreamFunnel.monitor(
-        input.toDF().toDF("doc_id", "source", "text"), "source", stages) {
-        (rep, _) =>
-          rows(rep).foreach { case (k, (e, p)) =>
-            val (e0, p0) = acc.getOrElse(k, (0L, 0L))
-            acc(k) = (e0 + e, p0 + p)
+    val q = MicroBatch.each(input.toDF().toDF("doc_id", "source", "text")) {
+        (batch, _) =>
+          graft.functions.GraftFunctions.register(batch.sparkSession)
+          val flagged = batch.select(col("source") +:
+            stages.map { case (n, c) => c.as(n) }: _*)
+          rows(Funnel.report(flagged, "source", stages.map(_._1))).foreach {
+            case (k, (e, p)) =>
+              val (e0, p0) = acc.getOrElse(k, (0L, 0L))
+              acc(k) = (e0 + e, p0 + p)
           }
       }
       .queryName("stream_funnel_fixture_test")

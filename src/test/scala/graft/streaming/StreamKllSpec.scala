@@ -91,8 +91,9 @@ class StreamKllSpec extends AnyFunSuite {
     val parts = values.grouped(math.max(1, values.size / 3)).toSeq
     val running = KllSketch.empty(K)
     val input = MemoryStream[Double]
-    val q = StreamKll.monitor(input.toDF().toDF("value"), "value", K) {
-        (s, _) => running.merge(s)
+    val q = MicroBatch.each(input.toDF().toDF("value")) { (batch, batchId) =>
+        if (!batch.isEmpty)
+          running.merge(KllSketch.ofColumn(batch, "value", K, 0x6b6c6cL + batchId))
       }
       .queryName("stream_kll_test")
       .start()

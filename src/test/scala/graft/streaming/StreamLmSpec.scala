@@ -45,9 +45,10 @@ class StreamLmSpec extends AnyFunSuite {
       val parts = incRows.grouped(math.max(1, (incRows.length + 2) / 3)).toSeq
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Rec)]
       val input = MemoryStream[(Long, String)]
-      val q = StreamLm.score(spark,
-          input.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl) {
-          (rep, batchId) => rows(rep).foreach(r => got += batchId -> r)
+      val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+          (batch, batchId) =>
+            rows(TrigramModel.scoreFromModel(batch, "doc_id", "text",
+              spark.table(tbl))).foreach(r => got += batchId -> r)
         }
         .queryName("stream_lm_fixture_test")
         .start()

@@ -36,9 +36,10 @@ class StreamNoveltySpec extends AnyFunSuite {
       val parts = incRows.grouped(math.max(1, (incRows.length + 2) / 3)).toSeq
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Rec)]
       val input = MemoryStream[(Long, String)]
-      val q = StreamNovelty.score(spark,
-          input.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl, n = 4) {
-          (rep, batchId) => rows(rep).foreach(r => got += batchId -> r)
+      val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+          (batch, batchId) =>
+            rows(Novelty.noveltyAgainstIndex(spark, tbl, batch, "doc_id",
+              "text", n = 4)).foreach(r => got += batchId -> r)
         }
         .queryName("stream_novelty_fixture_test")
         .start()

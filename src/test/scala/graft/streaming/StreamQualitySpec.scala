@@ -34,10 +34,12 @@ class StreamQualitySpec extends AnyFunSuite {
     val parts = docRows.grouped(math.max(1, (docRows.length + 2) / 3)).toSeq
     val scoredRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Rec)]
     val input = MemoryStream[(Long, String, String, Long)]
-    val q = StreamQuality.score(
-        input.toDF().toDF("doc_id", "text", "lang", "n_chars"),
-        "doc_id", "lang", "text", "n_chars", "en", w) {
-        (scored, batchId) => rows(scored).foreach(r => scoredRows += batchId -> r)
+    val q = MicroBatch.each(
+        input.toDF().toDF("doc_id", "text", "lang", "n_chars")) {
+        (batch, batchId) =>
+          rows(graft.pipeline.QualityClassifier.scoreWith(batch, "doc_id",
+            "lang", "text", "n_chars", "en", w))
+            .foreach(r => scoredRows += batchId -> r)
       }
       .queryName("stream_quality_fixture_test")
       .start()

@@ -36,9 +36,11 @@ class StreamSemanticSpec extends AnyFunSuite {
       math.max(1, (corpusRows.length + 2) / 3)).toSeq
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Rec)]
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = StreamSemantic.admit(
-        input.toDF().toDF("vec_id", "emb"), evalVecs, "vec_id", "emb", 0.35) {
-        (flagged, batchId) => rows(flagged).foreach(r => admitted += batchId -> r)
+    val q = MicroBatch.each(input.toDF().toDF("vec_id", "emb")) {
+        (batch, batchId) =>
+          rows(graft.pipeline.Similarity.semanticDecontamAgainst(batch,
+            evalVecs, "vec_id", "emb", 0.35))
+            .foreach(r => admitted += batchId -> r)
       }
       .queryName("stream_semantic_fixture_test")
       .start()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -28,10 +29,12 @@ class StreamSkewSpec extends AnyFunSuite {
     val parts = evRows.grouped(math.max(1, (evRows.length + 2) / 3)).toSeq
     val acc = scala.collection.mutable.Map.empty[String, Long]
     val input = MemoryStream[(Long, String)]
-    val q = StreamSkew.monitor(
-        input.toDF().toDF("event_id", "event_type"), "event_type") {
-        (counts, _) =>
-          counts.collect().foreach { r =>
+    val q = MicroBatch.each(input.toDF().toDF("event_id", "event_type")) {
+        (batch, _) =>
+          // Each batch's (key, n) counters; the sum over batches feeds
+          // profileFromCounts.
+          batch.groupBy(col("event_type").as("key"))
+            .agg(count(lit(1)).as("n")).collect().foreach { r =>
             val k = r.getString(0)
             acc(k) = acc.getOrElse(k, 0L) + r.getLong(1)
           }

@@ -44,10 +44,12 @@ class StreamSq8Spec extends AnyFunSuite {
       val parts = qRows.grouped(2).toSeq // three 2-query micro-batches
       val got = scala.collection.mutable.ArrayBuffer.empty[Rec]
       val input = MemoryStream[(Long, Seq[Double])]
-      val q = StreamSq8.probe(spark,
-          input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          tbl, dim = 64, topK = 5) {
-          (rep, _) => got ++= rows(rep)
+      val q = MicroBatch.each(input.toDF().toDF("vec_id", "embedding")) {
+          (batch, _) =>
+            // The index path `require`s a nonempty batch of queries.
+            if (!batch.isEmpty)
+              got ++= rows(ScalarQuant.sq8TopKFromIndex(spark, tbl, batch,
+                "vec_id", "embedding", dim = 64, topK = 5))
         }
         .queryName("stream_sq8_fixture_test")
         .start()

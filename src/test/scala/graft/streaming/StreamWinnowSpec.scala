@@ -37,10 +37,10 @@ class StreamWinnowSpec extends AnyFunSuite {
       val parts = incRows.grouped(math.max(1, (incRows.length + 2) / 3)).toSeq
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Rec)]
       val input = MemoryStream[(Long, String)]
-      val q = StreamWinnow.admit(spark,
-          input.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl,
-          n = 4, w = 4) {
-          (rep, batchId) => rows(rep).foreach(r => got += batchId -> r)
+      val q = MicroBatch.each(input.toDF().toDF("doc_id", "text")) {
+          (batch, batchId) =>
+            rows(Winnow.admitAgainstIndex(spark, tbl, batch, "doc_id", "text",
+              n = 4, w = 4)).foreach(r => got += batchId -> r)
         }
         .queryName("stream_winnow_fixture_test")
         .start()
