@@ -47,18 +47,16 @@ object Plans {
     spark.sparkContext.setLogLevel("ERROR")
     def dump(name: String, suffix: String = ""): Unit = {
       println(s"\n===================== $name$suffix =====================")
-      println(SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      Harness.run(spark, name, sfDir)(df => println(df.queryExecution
+        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
+        .error.foreach(throw _)
     }
     Flagships.foreach(dump(_))
     // The archived layout the bench runs record queries on: partition
     // predicates become PartitionFilters (directory pruning) instead of a
     // post-scan Filter over a computed column.
-    val archiveDir = s"/tmp/graft-plans-archive-${Integer.toHexString(sfDir.hashCode)}"
-    graft.log.LogStore.ensureMaterialized(spark, sfDir, archiveDir)
-    spark.conf.set("spark.graft.recordSource", "archive")
-    spark.conf.set("spark.graft.archiveDir", archiveDir)
-    Seq("q01_scan", "q08_partitions").foreach(dump(_, " [archive layout]"))
+    val layout = Harness.useArchive(spark, sfDir)
+    Seq("q01_scan", "q08_partitions").foreach(dump(_, s" [$layout layout]"))
     spark.stop()
   }
 }

@@ -23,10 +23,10 @@ object Verify {
         SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    selected.keys.foreach { name =>
+      Harness.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      ).error.foreach { e =>
         failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // A query that fails must surface as a RED row in the driver's
@@ -41,24 +41,13 @@ object Verify {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       }
-      // Result fully consumed (written) — release this query's
-      // registered query-lifetime caches (graft.ops.Materialize).
-      finally graft.ops.Materialize.releaseAll(spark)
     }
     System.err.println(
       s"[verify] dumped ${selected.size - failed}/${selected.size} queries ($failed failed)")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Every string is escaped, control characters included — a tab or CR
+    // in an oracle's SQL would otherwise make the JSON file unparseable
+    // and silently drop every correctness check.
+    def q(s: String): String = "\"" + Harness.jsonString(s, s.length) + "\""
     val oracles = only match {
       case Some(ps) =>
         SparkEntry.oracleSql.filter { case (n, _) => ps.exists(n.startsWith) }

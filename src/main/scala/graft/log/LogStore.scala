@@ -17,11 +17,14 @@ import org.apache.spark.sql.functions.col
   */
 object LogStore {
 
-  /** Archive topics under `storeDir/<topic>/partition=<p>/...`. */
+  /** Archive `sfDir`'s topics under `storeDir/<topic>/partition=<p>/...`.
+    * Reads the live synthesis, not [[RecordLog.topic]]: with the archive
+    * layout on, that would copy the current `spark.graft.archiveDir`
+    * instead of `sfDir`. */
   def materialize(spark: SparkSession, sfDir: String, storeDir: String,
       topics: Seq[String] = Seq("events", "clicks")): Unit =
     topics.foreach { t =>
-      RecordLog.topic(spark, sfDir, t)
+      RecordLog.build(spark, sfDir, t)
         .write.mode(SaveMode.Overwrite)
         .partitionBy("partition")
         .parquet(s"$storeDir/$t")

@@ -88,7 +88,10 @@ object RecordLog {
         build(spark, sfDir, name).cache())
     else build(spark, sfDir, name)
 
-  private def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  /** The live synthesis of topic `name` from `sfDir`, whatever
+    * `spark.graft.recordSource` says — what [[LogStore.materialize]]
+    * archives. */
+  private[log] def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     GraftFunctions.register(spark)
     val ev0 = Tables.load(spark, sfDir, "events")
     val ev = name match {

@@ -22,8 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * This registry is the middle ground: operators persist through
   * [[barrier]]/[[register]], which track the frame; the caller that owns
   * the session lifecycle calls [[releaseAll]] once the query's result is
-  * fully consumed ([[graft.Verify]] after each result dump,
-  * [[graft.Bench]] between timed queries). Releasing is ALWAYS
+  * fully consumed ([[graft.Harness.run]] after each query's sink, for
+  * every main). Releasing is ALWAYS
   * correctness-safe — every registered frame is deterministic by the
   * repo's bit-reproducibility conventions (fixed-point arithmetic, no
   * nondeterministic functions), so a released-then-reused frame merely

@@ -80,15 +80,9 @@ final class HttpService(spark: SparkSession, port: Int,
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(200, 0L) // length 0 → chunked transfer encoding
     val os: OutputStream = ex.getResponseBody
-    val buffer = new java.lang.StringBuilder()
-    var oversize = false
-    val out: String => Unit = s => {
+    val tee = cache.tee(cache.key(args), s => {
       os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush()
-      if (!oversize) {
-        buffer.append(s)
-        if (buffer.length > 4 * 1024 * 1024) oversize = true
-      }
-    }
+    })
     try {
       // No GLOBAL sort: the reference streams results in (nondeterministic)
       // poll order, and a full driver-side orderBy of the result set would
@@ -101,12 +95,12 @@ final class HttpService(spark: SparkSession, port: Int,
       // letting the scan run to completion (the reference's known
       // inefficiency, `core.clj:85-87`).
       graft.ops.Deadline.withDeadlineGroup(spark, config.stopConsumersAfterNSeconds) { group =>
-        try JsonArrayRender.render(df, out)
+        try JsonArrayRender.render(df, tee.out)
         catch { case e: java.io.IOException =>
           graft.ops.Deadline.cancel(spark, group); throw e
         }
       }
-      if (!oversize) cache.put(cache.key(args), buffer.toString)
+      tee.commit()
     } catch {
       case _: java.io.IOException => () // client went away (C4/L4)
       case e: org.apache.spark.SparkException
@@ -273,24 +267,17 @@ final class HttpService(spark: SparkSession, port: Int,
             ex.sendResponseHeaders(200, 0L) // chunked
             val os: OutputStream = ex.getResponseBody
             toClose = Some(os)
-            // S7 parity with /search: completed small responses are
-            // replayable via /cached under the same 4 MB / TTL guard
-            // (VERDICT r11 item 6) — same buffer-unless-oversize shape.
-            val buffer = new java.lang.StringBuilder()
-            var oversize = false
-            val out: String => Unit = s => {
+            // S7 parity with /search: completed responses within the
+            // item size limit are replayable via /cached.
+            val tee = cache.tee(cache.key(args), s => {
               os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush()
-              if (!oversize) {
-                buffer.append(s)
-                if (buffer.length > 4 * 1024 * 1024) oversize = true
-              }
-            }
+            })
             try {
-              try JsonArrayRender.renderVerbatim(df, out)
+              try JsonArrayRender.renderVerbatim(df, tee.out)
               catch { case e: java.io.IOException =>
                 graft.ops.Deadline.cancel(spark, group); throw e
               }
-              if (!oversize) cache.put(cache.key(args), buffer.toString)
+              tee.commit()
             } catch {
               case _: java.io.IOException => () // client went away (L4)
               case e: org.apache.spark.SparkException

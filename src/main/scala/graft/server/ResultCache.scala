@@ -42,4 +42,28 @@ final class ResultCache(
     }
 
   def size: Int = map.synchronized(map.size())
+
+  /** A streamed response bound for key `k`: [[Tee.out]] passes each chunk
+    * to `sink` and buffers it until the buffer passes the per-item
+    * budget; [[Tee.commit]] then caches the buffered response iff it
+    * never did. */
+  def tee(k: String, sink: String => Unit): Tee = new Tee(k, sink)
+
+  final class Tee private[ResultCache] (k: String, sink: String => Unit) {
+    private var buffer = new java.lang.StringBuilder()
+
+    /** False once the response has outgrown the budget (and the buffer
+      * has been dropped). */
+    private[server] def buffering: Boolean = buffer != null
+
+    val out: String => Unit = s => {
+      sink(s)
+      if (buffer != null) {
+        buffer.append(s)
+        if (buffer.length > itemSizeLimit) buffer = null
+      }
+    }
+
+    def commit(): Unit = if (buffer != null) put(k, buffer.toString)
+  }
 }

@@ -15,20 +15,16 @@ object PlanDump {
     val outDir = if (args.length > 3) args(3) else "/root/repo/plans/r21"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.GraftSession.local(cpus, "/tmp/graft-plandump-warehouse")
-    val archiveDir = s"/tmp/graft-bench-archive-${Integer.toHexString(sfDir.hashCode)}"
-    graft.log.LogStore.ensureMaterialized(spark, sfDir, archiveDir)
-    spark.conf.set("spark.graft.recordSource", "archive")
-    spark.conf.set("spark.graft.archiveDir", archiveDir)
+    graft.Harness.useArchive(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$outDir/$name$suffix.txt"),
-        txt.getBytes("UTF-8"))
-      graft.ops.Materialize.releaseAll(spark)
-      spark.catalog.clearCache()
+      graft.Harness.run(spark, name, sfDir) { df =>
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$outDir/$name$suffix.txt"),
+          txt.getBytes("UTF-8"))
+      }.error.foreach(throw _)
       println(s"[plandump] wrote $outDir/$name$suffix.txt")
     }
     spark.stop()

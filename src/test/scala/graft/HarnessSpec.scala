@@ -1,0 +1,52 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.Materialize
+
+/** The query harness releases every frame a run registers, whether the
+  * sink returns or throws, and stays the only place in `src/main` that
+  * releases a query's frames or picks the record layout. */
+class HarnessSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("run times a query and releases its frames") {
+    Materialize.releaseAll(spark)
+    val baseline = Materialize.liveSnapshot(spark)
+    var liveInSink = 0
+    val r = Harness.run(spark, "q51_tfidf", TestSpark.Sf) { df =>
+      df.write.format("noop").mode("overwrite").save()
+      liveInSink = (Materialize.liveSnapshot(spark) -- baseline).size
+    }
+    assert(r.error.isEmpty, r.error)
+    assert(r.seconds > 0)
+    assert(liveInSink > 0, "q51_tfidf registers a barrier frame")
+    assert(Materialize.liveSnapshot(spark) == baseline)
+  }
+
+  test("run returns what the sink throws and still releases its frames") {
+    Materialize.releaseAll(spark)
+    val baseline = Materialize.liveSnapshot(spark)
+    val r = Harness.run(spark, "q51_tfidf", TestSpark.Sf) { _ =>
+      throw new IllegalStateException("sink failed")
+    }
+    assert(r.error.map(_.getMessage).contains("sink failed"))
+    assert(Materialize.liveSnapshot(spark) == baseline)
+  }
+
+  test("src/main releases frames and sets the record source only in Harness") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def holders(needle: String): Seq[String] = files
+      .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains(needle))
+      .map(_.getFileName.toString).sorted
+    assert(holders("Materialize.releaseAll(") == Seq("Harness.scala"))
+    assert(holders("spark.conf.set(\"spark.graft.recordSource\"") == Seq("Harness.scala"))
+  }
+}

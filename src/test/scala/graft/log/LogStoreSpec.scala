@@ -73,6 +73,24 @@ class LogStoreSpec extends AnyFunSuite {
       plan.matches("(?s).*PartitionFilters: \\[[^\\]]*partition[^\\]]*\\].*"), plan)
   }
 
+  test("materialize archives sfDir even when the archive layout is on") {
+    val a = java.nio.file.Files.createTempDirectory("graft-layout-a").toString
+    LogStore.materialize(spark, TestSpark.Sf, a, Seq("events"))
+    val sf2 = java.nio.file.Files.createTempDirectory("graft-layout-sf").toString
+    Tables.load(spark, TestSpark.Sf, "events").orderBy("event_id").limit(100)
+      .write.parquet(s"$sf2/events.parquet")
+    val b = java.nio.file.Files.createTempDirectory("graft-layout-b").toString
+    spark.conf.set("spark.graft.recordSource", "archive")
+    spark.conf.set("spark.graft.archiveDir", a)
+    try {
+      LogStore.materialize(spark, sf2, b, Seq("events"))
+      assert(LogStore.topic(spark, b, "events").count() === 100)
+    } finally {
+      spark.conf.unset("spark.graft.recordSource")
+      spark.conf.unset("spark.graft.archiveDir")
+    }
+  }
+
   test("an archive rewritten in place: the next topic read sees the new rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
     LogStore.materialize(spark, TestSpark.Sf, dir, Seq("events"))

@@ -31,6 +31,29 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(c.get("ok").isDefined)
   }
 
+  test("the response tee honours the configured item size limit") {
+    val chunk = "x" * (64 * 1024)
+    val chunks = Seq.fill(72)(chunk) // 4.5 MB
+    val big = new ResultCache(itemSizeLimit = 5 * 1024 * 1024)
+    val sent = new StringBuilder
+    val t = big.tee("k", sent ++= _)
+    chunks.foreach(t.out)
+    t.commit()
+    assert(sent.length == 72 * chunk.length)
+    assert(big.get("k").contains(sent.result()))
+
+    val small = new ResultCache(itemSizeLimit = 1024)
+    val s = small.tee("k", _ => ())
+    s.out("x" * 1000)
+    assert(s.buffering)
+    s.out("x" * 100)
+    assert(!s.buffering, "buffering stops after the chunk that crosses the limit")
+    s.out("y")
+    s.commit()
+    assert(small.get("k").isEmpty)
+    assert(small.size == 0)
+  }
+
   test("key canonicalization is argument-order insensitive") {
     val c = new ResultCache()
     assert(c.key(Map("b" -> "2", "a" -> "1")) == c.key(Map("a" -> "1", "b" -> "2")))
