@@ -35,8 +35,12 @@ object Main {
       case "cli" =>
         val opts = QueryOptions.parse(args.toSeq.tail)
         val df = LogQuery.canonical(LogQuery.stream(spark, opts.bootstrapServers, opts))
-        JsonArrayRender.render(df, print)
-        println()
+        // Not `print`: System.out flushes at every newline, and a pretty
+        // record holds several. Each chunk of `render` (records coalesced
+        // up to 4 KB, and each partition's end) is one write to stdout.
+        val stdout = new java.io.FileOutputStream(java.io.FileDescriptor.out)
+        JsonArrayRender.render(df, stdout.write(_))
+        stdout.write('\n')
         spark.stop()
       case "server" =>
         val config = graft.core.Config.load()

@@ -39,9 +39,11 @@ final class HttpService(spark: SparkSession, port: Int,
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
   private def reply(ex: HttpExchange, status: Int, body: String,
       contentType: String = "application/json"): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    val bytes = utf8(body)
     ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(status, bytes.length.toLong)
     val os = ex.getResponseBody
@@ -80,14 +82,18 @@ final class HttpService(spark: SparkSession, port: Int,
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(200, 0L) // length 0 → chunked transfer encoding
     val os: OutputStream = ex.getResponseBody
-    val tee = cache.tee(cache.key(args), s => {
-      os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush()
-    })
+    // Each render chunk is one write and its flush, so one HTTP chunk:
+    // `[`, the pioneer and `]` alone, then whole records coalesced up to
+    // JsonArrayRender.ChunkBytes (the first record alone, so it leaves as
+    // soon as the first non-empty partition's job ends). The JDK server
+    // cuts only a longer write — a single record over 4096 bytes — into
+    // several chunks.
+    val tee = cache.tee(cache.key(args), HttpService.chunk(os))
     try {
       // No GLOBAL sort: the reference streams results in (nondeterministic)
       // poll order, and a full driver-side orderBy of the result set would
       // be the wrong plan at scale. Within-partition ordering keeps chunks
-      // locally coherent; JsonArrayRender.rows then streams the partitions
+      // locally coherent; JsonArrayRender.render then streams the partitions
       // in order, one job per partition, holding one partition at a time.
       // (The CLI keeps canonical total order for reproducible output.)
       // L3: every query runs under the configured wall-clock kill switch;
@@ -141,13 +147,13 @@ final class HttpService(spark: SparkSession, port: Int,
     ex.sendResponseHeaders(200, 0L) // chunked
     val os: OutputStream = ex.getResponseBody
     // Two writers — the stream thread's batches and this thread's
-    // keep-alives — so each chunk is written whole under the lock.
-    val out: String => Unit = s => os.synchronized {
-      os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush()
-    }
+    // keep-alives — so each chunk is written whole under the lock. One
+    // record per chunk: a follow client reads each chunk as one row.
+    val chunk = HttpService.chunk(os)
+    val out: Array[Byte] => Unit = b => os.synchronized(chunk(b))
     try {
-      out("[")
-      out(JsonArrayRender.Pioneer)
+      out(utf8("["))
+      out(utf8(JsonArrayRender.Pioneer))
       val q = graft.streaming.MicroBatch.each(df) { (batch, _) =>
         JsonArrayRender.renderRecords(
           batch.sortWithinPartitions("type", "topic", "partition", "offset"), out)
@@ -163,11 +169,11 @@ final class HttpService(spark: SparkSession, port: Int,
         // keep-alive write failing (L4 on a quiet topic).
         val deadline = System.nanoTime() + config.stopConsumersAfterNSeconds * 1000000000L
         while (!q.awaitTermination(HttpService.FollowIntervalMs) && System.nanoTime() < deadline)
-          out(" ")
+          out(utf8(" "))
       } finally {
         try q.stop() catch { case _: Exception => () }
       }
-      out("]")
+      out(utf8("]"))
     } catch {
       case e: Exception =>
         // A broken pipe arrives bare (the close-bracket write) or wrapped
@@ -268,10 +274,9 @@ final class HttpService(spark: SparkSession, port: Int,
             val os: OutputStream = ex.getResponseBody
             toClose = Some(os)
             // S7 parity with /search: completed responses within the
-            // item size limit are replayable via /cached.
-            val tee = cache.tee(cache.key(args), s => {
-              os.write(s.getBytes(StandardCharsets.UTF_8)); os.flush()
-            })
+            // item size limit are replayable via /cached. One row per
+            // chunk: the rows are not coalesced.
+            val tee = cache.tee(cache.key(args), HttpService.chunk(os))
             try {
               try JsonArrayRender.renderVerbatim(df, tee.out)
               catch { case e: java.io.IOException =>
@@ -361,6 +366,11 @@ final class HttpService(spark: SparkSession, port: Int,
 }
 
 object HttpService {
+  /** Writes each array as one chunk of a chunked response body. */
+  private def chunk(os: OutputStream): Array[Byte] => Unit = b => {
+    os.write(b); os.flush()
+  }
+
   /** The follow stream's trigger interval, which is also its keep-alive
     * interval. */
   private val FollowIntervalMs = 500L

@@ -1,5 +1,7 @@
 package graft.server
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 /** The reference's query-result cache (S7): completed rendered responses,
   * ≤ 4 MB each, kept for 60 minutes / 100 entries, keyed by the query's
   * canonicalized argument list (`/root/reference/src/kbrowse/core.clj:41-54`).
@@ -34,36 +36,40 @@ final class ResultCache(
     }
   }
 
-  /** Cache iff within the per-item byte budget (the reference aborts
-    * buffering past 4 MB with a char-0 marker; same outcome here). */
+  /** Cache iff within the per-item byte budget, counted in UTF-8 bytes
+    * (the reference aborts buffering past 4 MB with a char-0 marker; same
+    * outcome here). */
   def put(k: String, v: String): Unit =
-    if (v.length <= itemSizeLimit) map.synchronized {
-      map.put(k, Entry(v, System.currentTimeMillis())); ()
-    }
+    if (v.getBytes(UTF_8).length <= itemSizeLimit) store(k, v)
+
+  private def store(k: String, v: String): Unit = map.synchronized {
+    map.put(k, Entry(v, System.currentTimeMillis())); ()
+  }
 
   def size: Int = map.synchronized(map.size())
 
   /** A streamed response bound for key `k`: [[Tee.out]] passes each chunk
-    * to `sink` and buffers it until the buffer passes the per-item
+    * to `sink` and buffers its bytes until the buffer passes the per-item
     * budget; [[Tee.commit]] then caches the buffered response iff it
     * never did. */
-  def tee(k: String, sink: String => Unit): Tee = new Tee(k, sink)
+  def tee(k: String, sink: Array[Byte] => Unit): Tee = new Tee(k, sink)
 
-  final class Tee private[ResultCache] (k: String, sink: String => Unit) {
-    private var buffer = new java.lang.StringBuilder()
+  final class Tee private[ResultCache] (k: String, sink: Array[Byte] => Unit) {
+    private var buffer = new java.io.ByteArrayOutputStream()
 
     /** False once the response has outgrown the budget (and the buffer
       * has been dropped). */
     private[server] def buffering: Boolean = buffer != null
 
-    val out: String => Unit = s => {
-      sink(s)
+    val out: Array[Byte] => Unit = b => {
+      sink(b)
       if (buffer != null) {
-        buffer.append(s)
-        if (buffer.length > itemSizeLimit) buffer = null
+        buffer.write(b, 0, b.length)
+        if (buffer.size > itemSizeLimit) buffer = null
       }
     }
 
-    def commit(): Unit = if (buffer != null) put(k, buffer.toString)
+    def commit(): Unit =
+      if (buffer != null) store(k, buffer.toString(UTF_8))
   }
 }

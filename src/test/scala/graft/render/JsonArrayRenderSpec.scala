@@ -18,7 +18,7 @@ class JsonArrayRenderSpec extends AnyFunSuite {
     val df = Seq(("t", 0, 0L, "k0", """{"k": 7}"""), ("t", 1, 1L, "107", "v1"))
       .toDF("topic", "partition", "offset", "key", "value")
     val sb = new StringBuilder
-    JsonArrayRender.render(df, s => { sb.append(s); () })
+    JsonArrayRender.render(df, b => { sb.append(new String(b, "UTF-8")); () })
     val root = mapper.readTree(sb.toString)
     assert(root.isArray)
     assert(root.get(0).get("type").asText() == "pioneer")
@@ -29,7 +29,7 @@ class JsonArrayRenderSpec extends AnyFunSuite {
     val df = Seq(("t", 0, 0L, "107", """{"k": 7}"""), ("t", 0, 1L, "k0", "v0"))
       .toDF("topic", "partition", "offset", "key", "value")
     val sb = new StringBuilder
-    JsonArrayRender.render(df, s => { sb.append(s); () })
+    JsonArrayRender.render(df, b => { sb.append(new String(b, "UTF-8")); () })
     val arr = mapper.readTree(sb.toString)
     val r1 = arr.get(1)
     assert(r1.get("key").isNumber && r1.get("key").asLong() == 107L) // "107" → 107

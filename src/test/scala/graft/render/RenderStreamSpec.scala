@@ -1,5 +1,6 @@
 package graft.render
 
+import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -17,7 +18,7 @@ import graft.core.QueryOptions
 import graft.log.LogQuery
 import graft.ops.Deadline
 
-/** The result stream behind every route ([[JsonArrayRender.rows]]):
+/** The result stream behind every route ([[JsonArrayRender]]):
   *  - job shape: one single-task job per partition, one at a time, in
   *    partition order and in the caller's job group;
   *  - bytes: the same output as the `toJSON.toLocalIterator()` path it
@@ -27,6 +28,8 @@ import graft.ops.Deadline
 class RenderStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val mapper = new ObjectMapper()
+
+  private def text(chunk: Array[Byte]): String = new String(chunk, StandardCharsets.UTF_8)
 
   /** One started job, as the listener saw it. */
   private final case class Job(id: Int, group: String, sqlExecution: Boolean,
@@ -81,7 +84,7 @@ class RenderStreamSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val sb = new StringBuilder
     sc.setJobGroup(group, "render", interruptOnCancel = false)
-    try JsonArrayRender.renderVerbatim(df, s => { sb.append(s); () })
+    try JsonArrayRender.renderVerbatim(df, b => { sb.append(text(b)); () })
     finally sc.clearJobGroup()
     sb.toString
   }
@@ -156,7 +159,8 @@ class RenderStreamSpec extends AnyFunSuite {
     val sb = new StringBuilder
     val (_, jobs, events) = recording {
       s.sparkContext.setJobGroup(group, "render", interruptOnCancel = false)
-      try JsonArrayRender.render(df, sb.append(_)) finally s.sparkContext.clearJobGroup()
+      try JsonArrayRender.render(df, b => { sb.append(text(b)); () })
+      finally s.sparkContext.clearJobGroup()
     }
     assert(partitionJobs(group, jobs, events).size >= 3)
     val arr = mapper.readTree(sb.toString)
@@ -180,10 +184,14 @@ class RenderStreamSpec extends AnyFunSuite {
     sb.append("]").toString
   }
 
-  private def rendered(f: (DataFrame, String => Unit) => Unit, df: DataFrame): String = {
-    val sb = new StringBuilder
-    f(df, s => { sb.append(s); () })
-    sb.toString
+  private def rendered(f: (DataFrame, Array[Byte] => Unit) => Unit, df: DataFrame): String =
+    text(renderedBytes(f, df))
+
+  private def renderedBytes(f: (DataFrame, Array[Byte] => Unit) => Unit,
+      df: DataFrame): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream
+    f(df, bytes.write(_))
+    bytes.toByteArray
   }
 
   test("renderVerbatim is byte-identical to the toJSON framing on every column type") {
@@ -212,6 +220,29 @@ class RenderStreamSpec extends AnyFunSuite {
       assert(body.contains(text), text)
   }
 
+  /** A record frame of edge values over 3 partitions, no shuffle. */
+  private def edgeRecords: DataFrame = {
+    val texts = Seq("007", "1e2", "-0", "null", "true", " 12 ", "1 2", """{"a":1,"a":2}""",
+      "[1,", "", "\"q\"", "107", "k0", "héllo ✓ 日本語", "😀 emoji 👍🏽", "say \"hi\" \\ /",
+      "tab\tnew\nline\r\u0001\u001f\u007f\u2028",
+      // Escapes that parse to lone surrogates (a truncated emoji, as
+      // JSON.stringify writes it), a pair and a plain escape.
+      "\"\\ud83d x\"", "{\"a\":\"\\udc00\"}", "{\"\\ud83d\":[\"\\ud83d\\ude00 \\u00e9\"]}",
+      "é" * 2100)
+    assert(texts.last.getBytes(StandardCharsets.UTF_8).length > 4096)
+    val rows = texts.indices.map { i =>
+      org.apache.spark.sql.Row("result", if (i == 4) null else s"tópic-$i", i % 3, i * 7L,
+        1704067200000L + i, texts(i), texts(texts.size - 1 - i))
+    } ++ Seq(
+      org.apache.spark.sql.Row("offset", "t", 0, 1L, 2L, null, "v"),
+      org.apache.spark.sql.Row("result", "t", 1, 2L, 3L, "k", null),
+      org.apache.spark.sql.Row("result", "t", 2, 3L, 4L, null, null))
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "type STRING, topic STRING, partition INT, offset BIGINT, timestamp BIGINT, " +
+        "key STRING, value STRING")
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
   test("render is byte-identical to the toJSON path for each /search request form") {
     val forms = Seq(
       "topics=events&key-regex=13&default-partition",
@@ -222,14 +253,41 @@ class RenderStreamSpec extends AnyFunSuite {
       "topics=events&start-timestamp=1704153600000&stop-timestamp=1704175200000",
       "topics=events,clicks&key-regex=1[0-9]",
       "topics=events")
-    for (form <- forms) {
+    val frames = forms.map { form =>
       val opts = QueryOptions.parseQueryString(s"bootstrap-servers=${TestSpark.Sf}&$form")
-      val df = LogQuery.stream(spark, opts.bootstrapServers, opts)
+      form -> LogQuery.stream(spark, opts.bootstrapServers, opts)
         .sortWithinPartitions("type", "topic", "partition", "offset")
-      val body = rendered(JsonArrayRender.render, df)
+    } :+ ("edge records" -> edgeRecords)
+    // The old path served each chunk as `getBytes(UTF_8)`, so the oracle
+    // is its text so encoded (a lone surrogate becomes `?`).
+    val bodies = frames.map { case (form, df) =>
+      val bytes = renderedBytes(JsonArrayRender.render(_, _), df)
+      val body = text(bytes)
       assert(mapper.readTree(body).size() > 1, s"$form matched no record")
-      assert(body == oldPath(df, JsonArrayRender.renderRecord), form)
+      assert(bytes.sameElements(
+        oldPath(df, JsonArrayRender.renderRecord).getBytes(StandardCharsets.UTF_8)), form)
+      body
     }
+    val edges = bodies.last
+    assert(mapper.readTree(edges).size() == 25)
+    for (t <- Seq("😀 emoji 👍🏽", "\"key\" : 100.0", "\"value\" : \"007\"",
+        "\"key\" : \"[1,\"", "\"key\" : \"\"", "\"key\" : \"q\"", "\\u0001",
+        "\"key\" : \"? x\"", "\"a\" : \"?\"", "\"?\" : [ \"😀 é\" ]"))
+      assert(edges.contains(t), t)
+    // Follow's record chunks are the same bytes.
+    val follow = new StringBuilder("[" + JsonArrayRender.Pioneer)
+    JsonArrayRender.renderRecords(frames.last._2, b => { follow.append(text(b)); () })
+    assert(follow.append("]").toString == edges)
+  }
+
+  test("a record column that is not string, int or long is refused before any output") {
+    val df = spark.range(0, 3).selectExpr("CAST(id AS string) AS key", "id * 0.5D AS score")
+    var chunks = 0
+    val e = intercept[IllegalArgumentException] {
+      JsonArrayRender.render(df, _ => chunks += 1)
+    }
+    assert(e.getMessage.contains("score"), e.getMessage)
+    assert(chunks == 0)
   }
 
   test("known difference: a narrowed day-time interval prints in its own units") {
@@ -242,14 +300,14 @@ class RenderStreamSpec extends AnyFunSuite {
 
   /** Runs `render` under a deadline like `/search` does; returns the
     * failure, the rendered text and the deadline's job group. */
-  private def underDeadline(seconds: Int)(render: (String => Unit) => Unit)
+  private def underDeadline(seconds: Int)(render: (Array[Byte] => Unit) => Unit)
       : (Throwable, String, String) = {
     val sb = new StringBuilder
     var group = ""
     val e = intercept[SparkException] {
       Deadline.withDeadlineGroup(spark, seconds) { g =>
         group = g
-        render(s => { sb.append(s); () })
+        render(b => { sb.append(text(b)); () })
       }
     }
     (e, sb.toString, group)
@@ -282,7 +340,9 @@ class RenderStreamSpec extends AnyFunSuite {
     val df = spark.range(0, 8, 1, 4).toDF("id")
     val (e, body, group) = underDeadline(2) { out =>
       // The consumer stalls past the deadline on partition 0's last row.
-      JsonArrayRender.renderVerbatim(df, s => { out(s); if (s.contains("\"id\":1}")) Thread.sleep(4000) })
+      JsonArrayRender.renderVerbatim(df, b => {
+        out(b); if (text(b).contains("\"id\":1}")) Thread.sleep(4000)
+      })
     }
     assert(e.getMessage.contains("cancelled"), e.getMessage)
     assert(body == """[{"type":"pioneer"}, {"id":0}, {"id":1}""")
@@ -296,8 +356,8 @@ class RenderStreamSpec extends AnyFunSuite {
       intercept[java.io.IOException] {
         Deadline.withDeadlineGroup(spark, 600) { g =>
           group = g
-          JsonArrayRender.renderVerbatim(df, s =>
-            if (s.contains("\"id\":99}")) throw new java.io.IOException("Broken pipe"))
+          JsonArrayRender.renderVerbatim(df, b =>
+            if (text(b).contains("\"id\":99}")) throw new java.io.IOException("Broken pipe"))
         }
       }
     }

@@ -1,8 +1,10 @@
 package graft.server
 
 import java.net.{HttpURLConnection, URI}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import scala.io.Source
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,14 +22,63 @@ class HttpServiceSpec extends AnyFunSuite {
       kafkaBootstrapServers = Map("sandbox" -> TestSpark.Sf))).start()
   private val mapper = new ObjectMapper()
 
-  private def get(path: String): (Int, String) = {
-    val url = new URI(s"http://localhost:${svc.boundPort}$path").toURL
+  private def get(path: String): (Int, String) = getFrom(svc.boundPort, path)
+
+  private def getFrom(port: Int, path: String): (Int, String) = {
+    val url = new URI(s"http://localhost:$port$path").toURL
     val conn = url.openConnection().asInstanceOf[HttpURLConnection]
     conn.setConnectTimeout(5000)
     val status = conn.getResponseCode
     val stream = if (status >= 400) conn.getErrorStream else conn.getInputStream
     val body = if (stream == null) "" else Source.fromInputStream(stream).mkString
     (status, body)
+  }
+
+  /** The data of each chunk of a raw chunked response to GET `path`. */
+  private def rawChunks(port: Int, path: String): Seq[Array[Byte]] = {
+    val sock = new java.net.Socket("localhost", port)
+    val raw = try {
+      sock.setSoTimeout(120000)
+      sock.getOutputStream.write(
+        s"GET $path HTTP/1.1\r\nHost: localhost\r\nConnection: close\r\n\r\n".getBytes(UTF_8))
+      sock.getInputStream.readAllBytes()
+    } finally sock.close()
+    def crlf(from: Int): Int = {
+      val i = new String(raw, from, raw.length - from, ISO_8859_1).indexOf("\r\n")
+      assert(i >= 0, "unterminated line")
+      from + i
+    }
+    val head = new String(raw, 0, raw.length, ISO_8859_1)
+    assert(head.startsWith("HTTP/1.1 200") &&
+      head.toLowerCase.contains("transfer-encoding: chunked"), head.take(200))
+    val chunks = Seq.newBuilder[Array[Byte]]
+    var pos = head.indexOf("\r\n\r\n") + 4
+    var size = -1
+    while (size != 0) {
+      val eol = crlf(pos)
+      size = Integer.parseInt(new String(raw, pos, eol - pos, ISO_8859_1).trim, 16)
+      if (size > 0) chunks += java.util.Arrays.copyOfRange(raw, eol + 2, eol + 2 + size)
+      pos = eol + 2 + size + 2
+    }
+    chunks.result()
+  }
+
+  /** The byte length of each record of a record chunk (`", " + JSON`)*. */
+  private def recordLengths(chunk: Array[Byte]): Seq[Int] = {
+    assert(chunk.startsWith(", ".getBytes(UTF_8)), new String(chunk, UTF_8).take(80))
+    // "[ " has the length of the leading ", ": parser offsets are chunk offsets.
+    val asArray = "[ ".getBytes(UTF_8) ++ chunk.drop(2) ++ "]".getBytes(UTF_8)
+    val p = mapper.getFactory.createParser(asArray)
+    assert(p.nextToken() == JsonToken.START_ARRAY)
+    val ends = Seq.newBuilder[Int]
+    while (p.nextToken() == JsonToken.START_OBJECT) {
+      p.skipChildren()
+      ends += p.currentLocation().getByteOffset.toInt
+    }
+    assert(p.currentToken() == JsonToken.END_ARRAY)
+    val e = ends.result()
+    assert(e.lastOption.contains(chunk.length), "a chunk ends inside a record")
+    (0 +: e).sliding(2).map { case Seq(a, b) => b - a }.toSeq
   }
 
   private val searchQs =
@@ -296,5 +347,60 @@ class HttpServiceSpec extends AnyFunSuite {
     val (status, cached) = get(s"/cached?$qs")
     assert(status == 200)
     assert(cached.nonEmpty && cached == direct)
+  }
+
+  test("/search sends whole records in chunks of at most 4 KB; /pipeline and follow one row per chunk") {
+    // Several partitions: AQE would coalesce this small result into one.
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val msvc = new HttpService(session, port = 0, graft.core.Config.Defaults).start()
+    val form = "topics=events,clicks&key-regex=1[0-9]&print-offset=10"
+    val qs = s"bootstrap-servers=${TestSpark.Sf}&$form"
+    val (chunks, cached) = try {
+      val c = rawChunks(msvc.boundPort, s"/search?$qs")
+      (c, getFrom(msvc.boundPort, s"/cached?$qs"))
+    } finally msvc.stop()
+    assert(new String(chunks.head, UTF_8) == "[")
+    assert(new String(chunks(1), UTF_8) == graft.render.JsonArrayRender.Pioneer)
+    assert(new String(chunks.last, UTF_8) == "]")
+    val records = chunks.slice(2, chunks.size - 1)
+    records.foreach(c => assert(c.length <= 4096, c.length))
+    val lengths = records.map(recordLengths)
+    assert(lengths.head.size == 1, "the first record goes alone")
+    // The records of each partition, as the route builds and streams them.
+    val opts = graft.core.QueryOptions.parseQueryString(qs)
+    val perPartition = graft.log.LogQuery.stream(session, opts.bootstrapServers, opts)
+      .sortWithinPartitions("type", "topic", "partition", "offset")
+      .rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    val total = perPartition.sum
+    assert(perPartition.count(_ > 0) >= 2, perPartition)
+    assert(lengths.map(_.size).sum == total)
+    assert(records.size < total / 4, s"${records.size} chunks for $total records")
+    // A chunk ends after the first record, at a partition's end, or where
+    // the next record would not have fit.
+    val partitionEnds = perPartition.scanLeft(0)(_ + _).tail.toSet
+    val ends = lengths.map(_.size).scanLeft(0)(_ + _).tail
+    assert(partitionEnds.filter(e => e > 0 && e < total).subsetOf(ends.toSet),
+      (partitionEnds, ends))
+    for (i <- 1 until records.size - 1 if !partitionEnds(ends(i)))
+      assert(records(i).length + lengths(i + 1).head > 4096, s"chunk $i ended early")
+    val body = new String(chunks.flatten.toArray, UTF_8)
+    assert(mapper.readTree(body).size() == total + 1)
+    assert(cached == (200, body), "/cached replays the streamed body")
+
+    val pipeline = rawChunks(svc.boundPort, "/pipeline?name=q24_text_stats&dir=sandbox")
+    val rows = pipeline.slice(2, pipeline.size - 1)
+    assert(rows.size > 1)
+    rows.foreach(c => assert(recordLengths(c).size == 1))
+
+    val fsvc = new HttpService(spark, port = 0,
+      graft.core.Config.Defaults.copy(stopConsumersAfterNSeconds = 3)).start()
+    try {
+      val follow = rawChunks(fsvc.boundPort, s"/search?$searchQs&follow")
+      assert(new String(follow.last, UTF_8) == "]")
+      val tail = follow.slice(2, follow.size - 1).filter(c => new String(c, UTF_8) != " ")
+      assert(tail.nonEmpty)
+      tail.foreach(c => assert(recordLengths(c).size == 1))
+    } finally fsvc.stop()
   }
 }
