@@ -108,14 +108,25 @@ object ArgmaxDotExpr {
             s"${cents.getArray(m).numElements()}")
       m += 1
     }
-    var bestS = VecDotExpr.dot(v, cents.getArray(0)) - off.getDouble(0)
-    var bestId = ids.getLong(0)
-    m = 1
+    val (best, bestS) =
+      argmax(k, j => VecDotExpr.dot(v, cents.getArray(j)) - off.getDouble(j))
+    new GenericInternalRow(Array[Any](ids.getLong(best), bestS))
+  }
+
+  /** The nearest-centroid rule — the one copy this expression and the
+    * driver-side k-means trainer ([[graft.pipeline.Clustering.lloyd]])
+    * share: a strictly-greater left-to-right fold of `score` over rows
+    * `0 until k` keeps the FIRST maximum, so with ids ascending the
+    * lowest id wins a tie. Returns the winning row and its score. */
+  def argmax(k: Int, score: Int => Double): (Int, Double) = {
+    var best = 0
+    var bestS = score(0)
+    var m = 1
     while (m < k) {
-      val s = VecDotExpr.dot(v, cents.getArray(m)) - off.getDouble(m)
-      if (s > bestS) { bestS = s; bestId = ids.getLong(m) }
+      val s = score(m)
+      if (s > bestS) { bestS = s; best = m }
       m += 1
     }
-    new GenericInternalRow(Array[Any](bestId, bestS))
+    (best, bestS)
   }
 }

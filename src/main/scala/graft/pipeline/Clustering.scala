@@ -31,12 +31,25 @@ import org.apache.spark.sql.functions._
   * unrolled CTEs and reproduces assignments AND scores bit-for-bit — no
   * float tolerance anywhere.
   *
-  * Scale shape per round: assignment is a pure per-row expression against
-  * k collected centroids (zero shuffle); the update is one two-phase
-  * aggregation over slim (cluster, pos, long) triples — map-side combine
-  * collapses each partition to ≤ k×dim rows before the exchange, and the
-  * driver holds only k×dim longs (the O(P)-metadata pattern of
-  * [[graft.ops.ScalableCumSum]]). Empty clusters simply drop out of later
+  * Scale shape: training runs in one of two regimes, decided by ONE
+  * bounded collect of the lifted (vec_id, fx) rows ([[collectBounded]]):
+  *
+  *  - driver regime, the training frame holds at most
+  *    [[MaxCentroidCells]] cells (n×dim): that collect is the only
+  *    training job, and every Lloyd's round runs in driver memory
+  *    ([[lloyd]]) — at fixture scale a round costs microseconds, where
+  *    a Spark job per round cost ~0.1 s of scheduling and planning;
+  *  - distributed regime, past the bound: per round, assignment is a
+  *    pure per-row expression against k collected centroids (zero
+  *    shuffle) and the update one two-phase aggregation over slim
+  *    (cluster, pos, long) triples — map-side combine collapses each
+  *    partition to ≤ k×dim rows before the exchange, and the driver
+  *    holds only k×dim longs (the O(P)-metadata pattern of
+  *    [[graft.ops.ScalableCumSum]]).
+  *
+  * Both regimes give the same centroid bits (LloydRegimesSpec calls
+  * each on the same frames), and the final assignment is the zero-shuffle
+  * `argmax_dot` scan in both. Empty clusters simply drop out of later
   * rounds (ids of surviving clusters are stable).
   */
 object Clustering {
@@ -48,10 +61,12 @@ object Clustering {
 
   /** vec_id, emb (double), fx (exact fixed-point longs), fxd (same values
     * as doubles — the domain every dot product runs in). Cached: the
-    * corpus is re-scanned once per k-means round (query-lifetime intent,
-    * same contract as [[Similarity.bucketedNearDupPairs]]; registered
-    * with [[graft.ops.Materialize]] so session owners can release it —
-    * no barrier, the round-0 assignment consumes it sequentially). */
+    * training collect, the final assignment scan and the query-vector
+    * reads all consume it, and the distributed regime re-scans it once
+    * per k-means round (query-lifetime intent, same contract as
+    * [[Similarity.bucketedNearDupPairs]]; registered with
+    * [[graft.ops.Materialize]] so session owners can release it — no
+    * barrier, the training collect consumes it first). */
   private[graft] def lifted(corpus: DataFrame, idCol: String, embCol: String): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     graft.ops.Materialize.register(corpus
@@ -77,8 +92,15 @@ object Clustering {
     * huge-method JIT limit at IVF-scale k (10³–10⁵ clusters); see
     * [[graft.functions.ArgmaxDotExpr]] and the SCALING.md q22 lesson.
     * ClusteringSpec pins the two forms bit-identical (the old chain
-    * survives as [[chainWithCluster]]). */
+    * survives as [[chainWithCluster]]).
+    *
+    * No centroids (training saw no vectors) assign nothing: the frame
+    * is empty, as the oracle's cross join with an empty centroid set. */
   private[graft] def withCluster(e: DataFrame, cents: Seq[(Long, Array[Double])]): DataFrame = {
+    if (cents.isEmpty)
+      return e.where(lit(false))
+        .withColumn("cluster", lit(null).cast("long"))
+        .withColumn("score", lit(null).cast("double"))
     val r = graft.functions.GraftFunctions.argmaxDot(col("fxd"),
       typedLit(cents.map(_._2.toSeq)),
       typedLit(cents.map { case (_, c) => 0.5 * normSq(c) }),
@@ -111,26 +133,38 @@ object Clustering {
     scored.withColumn("cluster", bestJ).withColumn("score", bestS).drop("__s")
   }
 
-  /** Hard bound on k×dim — the driver-side footprint of one centroid
-    * refinement ([[updateCentroids]] collects ≤ k×dim (cluster, pos,
-    * sum, count) rows ≈ 32 bytes each, so 2²⁴ caps the collect at
-    * ~512 MB). This is the explicit O(k×dim)-metadata contract of the
-    * operator, stated the way [[graft.ops.ScalableCumSum]] states its
-    * O(P) one: k-means here is the IVF/SemDeDup COARSE quantizer (k up
-    * to ~10⁵ at dim ~10² fits with 100× headroom), not a per-row
-    * codebook — past this bound the update itself must become
-    * distributed, which is a different operator. */
+  /** Hard bound on driver-held training cells, used twice:
+    *  - k×dim, the centroid state of one refinement (the distributed
+    *    [[updateCentroids]] collects ≤ k×dim (cluster, pos, sum, count)
+    *    rows ≈ 32 bytes each, so 2²⁴ caps that collect at ~512 MB). This
+    *    is the explicit O(k×dim)-metadata contract of the operator,
+    *    stated the way [[graft.ops.ScalableCumSum]] states its O(P) one:
+    *    k-means here is the IVF/SemDeDup COARSE quantizer (k up to ~10⁵
+    *    at dim ~10² fits with 100× headroom), not a per-row codebook;
+    *  - n×dim, the training frame itself: at or below it the frame is
+    *    collected once ([[collectBounded]], 8 bytes a cell) and every
+    *    Lloyd's round runs in driver memory ([[lloyd]]); past it each
+    *    round stays a distributed scan plus aggregate
+    *    ([[distributedLloyd]]). */
   val MaxCentroidCells: Long = 1L << 24
+
+  private def requireCentroidCells(k: Int, dim: Int): Unit =
+    require(k.toLong * dim <= MaxCentroidCells,
+      s"k×dim = ${k.toLong * dim} exceeds the O(k×dim) driver-metadata " +
+        s"contract ($MaxCentroidCells cells): the centroid refinement " +
+        "holds one (sum, count) cell per (cluster, position) on the " +
+        "driver — see Clustering.MaxCentroidCells")
 
   /** One Lloyd's update: exact per-(cluster, position) long sums via
     * two-phase aggregation, k×dim rows collected, one double division per
     * component on the driver ([[MaxCentroidCells]] bounds the collect;
     * the caller `require`s it). Empty clusters yield no rows and drop
-    * out. */
+    * out; a position null in every member sums to 0 (null reads 0). */
   private[pipeline] def updateCentroids(assigned: DataFrame, dim: Int): Seq[(Long, Array[Double])] = {
     val rows = assigned
       .select(col("cluster"), posexplode(col("fx")).as(Seq("pos", "v")))
-      .groupBy("cluster", "pos").agg(sum("v").as("s"), count(lit(1)).as("n"))
+      .groupBy("cluster", "pos")
+      .agg(coalesce(sum("v"), lit(0L)).as("s"), count(lit(1)).as("n"))
       .collect()
     rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
       val c = new Array[Double](dim)
@@ -141,30 +175,158 @@ object Clustering {
     }
   }
 
+  /** One collected row of a lifted frame: `id` is null for a null
+    * `vec_id`, `fx` is null for a null embedding, and a null component
+    * reads 0 — as every `vec_dot` (null slots read 0.0) and every
+    * `sum` (nulls skipped) over the frame reads it. */
+  private[pipeline] final case class LiftedRow(id: java.lang.Long, fx: Array[Long])
+
+  /** The (vec_id, fx) rows of lifted frame `e` in `orderBy("vec_id")`
+    * order (null ids first), or None when `e` holds more than
+    * [[MaxCentroidCells]] cells (a null or empty vector counts as one).
+    * ONE job of one task: the task reads partitions in turn and stops
+    * as soon as the bound is passed, buffering at most the bound and
+    * shipping nothing past it — this collect decides the regime. */
+  private[pipeline] def collectBounded(e: DataFrame): Option[Array[LiftedRow]] = {
+    val qe = e.select(col("vec_id"), col("fx")).queryExecution
+    val rdd = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("train"))(qe.executedPlan.execute())
+    val bound = MaxCentroidCells
+    val got = rdd.sparkContext.runJob(rdd.coalesce(1),
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val buf = Array.newBuilder[LiftedRow]
+        var cells = 0L
+        while (cells <= bound && it.hasNext) {
+          val r = it.next()
+          val fx = if (r.isNullAt(1)) null else {
+            val a = r.getArray(1)
+            Array.tabulate(a.numElements())(i => if (a.isNullAt(i)) 0L else a.getLong(i))
+          }
+          cells += (if (fx == null) 1 else math.max(1, fx.length))
+          buf += LiftedRow(if (r.isNullAt(0)) null else r.getLong(0), fx)
+        }
+        if (cells <= bound) buf.result() else null
+      })
+    // An empty plan can have no partition at all, hence no task.
+    Option(got.headOption.getOrElse(Array.empty[LiftedRow])).map(_.sortBy(r =>
+      if (r.id == null) (0, 0L) else (1, r.id.longValue)))
+  }
+
+  /** Lloyd's rounds in driver memory over [[collectBounded]] rows,
+    * training on components `[from, from + d)` of each vector; returns
+    * the centroids of round `rounds` (the ones its assignment uses).
+    * It reproduces [[distributedLloyd]] bit for bit:
+    *  - seeds are the first k rows (the k lowest ids), cluster id =
+    *    0-based rank;
+    *  - assignment is the `argmax_dot` rule itself
+    *    ([[graft.functions.ArgmaxDotExpr.argmax]]) over the sequential
+    *    [[VecOps.dot]] fold in the lifted domain;
+    *  - centroids are exact `Long` sums per (cluster, position), then
+    *    one `Double` division per component;
+    *  - empty clusters drop out and surviving ids stay stable;
+    *  - null vectors assign nowhere and add nothing.
+    * Callers check every non-null vector holds `from + d` components. */
+  private[pipeline] def lloyd(rows: Array[LiftedRow], k: Int, rounds: Int,
+      from: Int, d: Int): Seq[(Long, Array[Double])] = {
+    def sub(fx: Array[Long]): Array[Double] =
+      Array.tabulate(d)(p => fx(from + p).toDouble)
+    var cents: Seq[(Long, Array[Double])] = rows.take(k).zipWithIndex.map {
+      case (r, i) =>
+        require(r.fx != null, s"k-means seed ${r.id} has a null embedding")
+        (i.toLong, sub(r.fx))
+    }.toSeq
+    for (_ <- 2 to rounds) {
+      val cs = cents.map(_._2).toArray
+      val halfNorms = cs.map(c => 0.5 * VecOps.normSq(c))
+      val sums = Array.ofDim[Long](cs.length, d)
+      val counts = new Array[Long](cs.length)
+      rows.foreach { r =>
+        if (r.fx != null) {
+          val v = sub(r.fx)
+          val (best, _) = graft.functions.ArgmaxDotExpr.argmax(cs.length,
+            j => VecOps.dot(v, cs(j)) - halfNorms(j))
+          counts(best) += 1
+          val s = sums(best)
+          var p = 0
+          while (p < d) { s(p) = Math.addExact(s(p), r.fx(from + p)); p += 1 }
+        }
+      }
+      cents = cents.indices.filter(counts(_) > 0).map { j =>
+        (cents(j)._1, Array.tabulate(d)(p => sums(j)(p).toDouble / counts(j).toDouble))
+      }
+    }
+    cents
+  }
+
+  /** The distributed rounds, the regime past [[MaxCentroidCells]]
+    * training cells: a seed collect, then per round one `argmax_dot`
+    * scan plus the [[updateCentroids]] aggregate. Same result as
+    * [[lloyd]] over the whole vector. */
+  private[pipeline] def distributedLloyd(e: DataFrame, k: Int,
+      rounds: Int): Seq[(Long, Array[Double])] = {
+    val seedRows = e.orderBy("vec_id").limit(k).select("fxd").collect()
+    if (seedRows.isEmpty) return Seq.empty
+    require(seedRows.forall(!_.isNullAt(0)), "a k-means seed has a null embedding")
+    val dim = seedRows.head.getSeq[Double](0).length
+    requireCentroidCells(k, dim)
+    var cents: Seq[(Long, Array[Double])] = seedRows.zipWithIndex.map {
+      case (r, i) => (i.toLong, r.getSeq[Double](0).toArray)
+    }.toSeq
+    for (_ <- 2 to rounds) cents = updateCentroids(withCluster(e, cents), dim)
+    cents
+  }
+
+  /** k-means centroids over the whole vector from collected rows: the
+    * seed's length is the dimension every vector must share. */
+  private[pipeline] def driverLloyd(rows: Array[LiftedRow], k: Int,
+      rounds: Int): Seq[(Long, Array[Double])] =
+    if (rows.isEmpty) Seq.empty
+    else {
+      require(rows.head.fx != null, s"k-means seed ${rows.head.id} has a null embedding")
+      val dim = rows.head.fx.length
+      requireCentroidCells(k, dim)
+      rows.foreach(r => require(r.fx == null || r.fx.length == dim,
+        s"k-means dimension mismatch: vector ${r.id} has ${r.fx.length} " +
+          s"components, the seeds have $dim"))
+      lloyd(rows, k, rounds, 0, dim)
+    }
+
+  /** The trained centroids of lifted frame `e`: in driver memory from
+    * `rows` (its [[collectBounded]] result) when there are rows, else
+    * by the distributed rounds. */
+  private[pipeline] def centroids(e: DataFrame, rows: Option[Array[LiftedRow]],
+      k: Int, rounds: Int): Seq[(Long, Array[Double])] = {
+    require(k >= 1 && rounds >= 1, "k and rounds must be positive")
+    rows.fold(distributedLloyd(e, k, rounds))(driverLloyd(_, k, rounds))
+  }
+
+  /** The lifted (vec_id, fxd) vectors of `queryIds` in lifted frame
+    * `e`: picked from `rows` (its [[collectBounded]] result) when
+    * present, else read by one filter collect. */
+  private[pipeline] def queryVectors(e: DataFrame, rows: Option[Array[LiftedRow]],
+      queryIds: Seq[Long]): Seq[(Long, Array[Double])] = rows match {
+    case Some(rs) =>
+      val wanted = queryIds.toSet
+      rs.toSeq.filter(r => r.id != null && wanted(r.id.longValue))
+        .map(r => (r.id.longValue, r.fx.map(_.toDouble)))
+    case None =>
+      e.filter(col("vec_id").isin(queryIds: _*))
+        .select(col("vec_id"), col("fxd")).collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+  }
+
   /** Assignment after `rounds` rounds, still carrying `emb` (for
     * downstream exact-cosine work), plus the centroids the final
     * assignment used (the trained coarse-quantizer codebook — what
     * [[ivfTopK]] probes). Seeds: the k lowest-id vectors, cluster id =
-    * 0-based rank in that order. */
+    * 0-based rank in that order. Training is one bounded collect plus
+    * driver rounds up to [[MaxCentroidCells]] cells, distributed rounds
+    * past it; the final assignment is the zero-shuffle `argmax_dot`
+    * scan either way. */
   private[pipeline] def trainAssign(e: DataFrame, k: Int,
       rounds: Int): (DataFrame, Seq[(Long, Array[Double])]) = {
-    require(k >= 1 && rounds >= 1, "k and rounds must be positive")
-    val seedRows = e.orderBy("vec_id").limit(k).select("fxd").collect()
-    val dim = seedRows.head.getSeq[Double](0).length
-    require(k.toLong * dim <= MaxCentroidCells,
-      s"k×dim = ${k.toLong * dim} exceeds the O(k×dim) driver-metadata " +
-        s"contract ($MaxCentroidCells cells): the centroid refinement " +
-        "collects one (sum, count) cell per (cluster, position) to the " +
-        "driver — see Clustering.MaxCentroidCells")
-    var cents: Seq[(Long, Array[Double])] = seedRows.zipWithIndex.map {
-      case (r, i) => (i.toLong, r.getSeq[Double](0).toArray)
-    }.toSeq
-    var assigned = withCluster(e, cents)
-    for (_ <- 2 to rounds) {
-      cents = updateCentroids(assigned, dim)
-      assigned = withCluster(e, cents)
-    }
-    (assigned, cents)
+    val cents = centroids(e, collectBounded(e), k, rounds)
+    (withCluster(e, cents), cents)
   }
 
   private def assignWithEmb(e: DataFrame, k: Int, rounds: Int): DataFrame =
@@ -202,10 +364,11 @@ object Clustering {
     * deterministic md5-gated fraction of the corpus, then the learned
     * centroids assign the FULL corpus in one extra [[withCluster]] scan
     * — the 100 TB codebook discipline made an exercised, oracle-gated
-    * path instead of a scaladoc promise. At scale the training passes
-    * (rounds × sample scan + k×dim driver refinements) run over
-    * `sampleFrac` of the data while the one full-corpus pass is the
-    * same zero-shuffle `argmax_dot` scan [[kmeans]] ends with; quality
+    * path instead of a scaladoc promise. At scale training touches only
+    * `sampleFrac` of the data — and a sample of at most
+    * [[MaxCentroidCells]] cells trains in the driver regime, one bounded
+    * collect — while the one full-corpus pass is the same zero-shuffle
+    * `argmax_dot` scan [[kmeans]] ends with; quality
     * degrades gracefully because centroids are distribution estimates
     * (ProductQuantSpec measures retrieval recall under sampled vs full
     * training). Seeds are the k lowest-id vectors OF THE SAMPLE, so the
@@ -230,8 +393,9 @@ object Clustering {
     * are identical row for row (ClusteringSpec pins it, bits included),
     * and smaller `nprobe` trades recall for a k/nprobe scan cut.
     *
-    * Scale shape: the corpus is assigned ONCE per training round (the
-    * zero-shuffle `argmax_dot` scan); at query time the probe list —
+    * Scale shape: training is [[trainAssign]]'s (one bounded collect in
+    * the driver regime, one zero-shuffle `argmax_dot` scan per round
+    * past it); at query time the probe list —
     * `queryIds × nprobe` (query-batch contract of [[Similarity
     * .batchTopK]]: a handful, requiring so) — BROADCASTS, candidates are
     * scored map-side inside their cells, and the per-(partition, query)

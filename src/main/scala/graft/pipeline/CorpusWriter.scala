@@ -553,12 +553,9 @@ object CorpusWriter {
     val spark = corpus.sparkSession
     Seq("", "_coarse", "_books", "_meta")
       .foreach(s => dropOrphanedLocation(spark, table + s))
-    val e = Clustering.lifted(corpus, idCol, embCol)
-    val (assigned, coarse) = Clustering.trainAssign(e, kCoarse, coarseRounds)
-    val (codes, books) =
-      ProductQuant.codeArrays(corpus, idCol, embCol, m, k, pqRounds, dim)
-    assigned.select(col("vec_id"), col("cluster").as("cell"))
-      .join(codes, "vec_id")
+    val (e, _, coarse, books) = ProductQuant.ivfPqTrained(corpus, idCol,
+      embCol, kCoarse, coarseRounds, m, k, pqRounds, dim)
+    ProductQuant.cellCodes(e, coarse, books, dim / m)
       .select(col("vec_id"), col("codes"), col("cell"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("cell")

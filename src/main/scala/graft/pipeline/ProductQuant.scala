@@ -13,18 +13,21 @@ import org.apache.spark.sql.functions._
   * Quantization for Nearest Neighbor Search", TPAMI 2011).
   *
   * Training reuses [[Clustering]]'s deterministic fixed-point Lloyd's
-  * machinery verbatim, once per subspace over the SLICED lifted frame
+  * machinery verbatim, once per subspace over the SLICED lifted vectors
   * (same seeds rule per subspace: the k lowest-id vectors' subvectors;
-  * same argmax_dot assignment; same exact integer centroid sums), so
-  * codes are bit-reproducible and the oracle replays one unrolled CTE
-  * chain per subspace. At 100 TB the codebook pass would train on a
-  * sample (a [[Clustering.MaxCentroidCells]]-bounded draw) — here it
-  * trains on the full corpus so the oracle can replay it exactly; the
-  * ENCODE pass is the full-corpus scan either way, and is the part that
-  * must scale: ONE zero-shuffle scan whose projection carries all m
-  * `argmax_dot` columns (r21 — previously m scans unioned), and the
-  * training rounds batch every subspace's refinement into one job
-  * ([[trainBooks]]).
+  * same argmax_dot assignment rule; same exact integer centroid sums),
+  * so codes are bit-reproducible and the oracle replays one unrolled
+  * CTE chain per subspace. Training runs in [[Clustering]]'s two
+  * regimes ([[trainBooks]]): up to [[Clustering.MaxCentroidCells]]
+  * training cells, ONE bounded collect and every subspace's rounds in
+  * driver memory; past it, one distributed job per round for all m
+  * subspaces. At 100 TB the codebook pass trains on a sample
+  * (`sampleFrac`, which can bring it back under the driver bound) —
+  * here it trains on the full corpus so the oracle can replay it
+  * exactly; the ENCODE pass is the full-corpus scan either way, and is
+  * the part that must scale: ONE zero-shuffle scan whose projection
+  * carries all m `argmax_dot` columns (r21 — previously m scans
+  * unioned).
   *
   * Retrieval ([[adcTopK]]) is asymmetric distance computation: the
   * query stays uncompressed; its dot product against every corpus
@@ -77,11 +80,25 @@ object ProductQuant {
     require(m >= 1 && dim % m == 0,
       s"dim=$dim must split evenly into m=$m subspaces")
     val e = Clustering.lifted(corpus, idCol, embCol)
-    val d = dim / m
-    val books = trainBooks(e, m, k, rounds, d, sampleFrac)
-    val codeCols = (0 until m).map(mi => subAssign(mi, books(mi), d))
-    (e, books, array(codeCols: _*))
+    val trainE =
+      if (sampleFrac >= 1.0) e
+      else e.filter(Clustering.sampleGate(sampleFrac))
+    val books = trainBooks(trainE, Clustering.collectBounded(trainE), m, k,
+      rounds, dim / m)
+    (encodable(e, books), books, codesColumn(books, dim / m))
   }
+
+  /** `e`, or nothing when training saw no vectors: with empty
+    * codebooks nothing encodes, as the oracle's cross join with an
+    * empty codebook. */
+  private def encodable(e: DataFrame,
+      books: Seq[Seq[(Long, Array[Double])]]): DataFrame =
+    if (books.exists(_.isEmpty)) e.where(lit(false)) else e
+
+  /** The m-long code array: every subspace's [[subAssign]] in one
+    * projection. */
+  private def codesColumn(books: Seq[Seq[(Long, Array[Double])]], d: Int): Column =
+    array(books.indices.map(mi => subAssign(mi, books(mi), d)): _*)
 
   /** Subspace `mi`'s assignment column: `argmax_dot` over the sliced
     * lifted vector — the exact [[Clustering.withCluster]] expression on
@@ -96,43 +113,58 @@ object ProductQuant {
       typedLit(cents.map { case (_, c) => 0.5 * VecOps.normSq(c) }),
       typedLit(cents.map(_._1))).getField("cluster")
 
-  /** All `m` subspace codebooks trained JOINTLY: per Lloyd's round ONE
-    * job computes every subspace's assignment (m `argmax_dot` columns
-    * in one projection) and every subspace's exact per-(cluster, pos)
-    * integer sums (one (mi, cluster, pos)-keyed aggregate, collected
-    * once). Arithmetic is verbatim [[Clustering.trainAssign]] +
-    * [[Clustering.updateCentroids]] per subspace — same seeds (the k
-    * lowest-id vectors' subvectors), same argmax, same long sums, same
-    * driver division — so books are bit-identical; what changes is the
-    * driver-round-trip count: 2·m jobs per round → 1 (the r21 bench
-    * measured the PQ family dominated by those round trips, not by
-    * data). The collect is ≤ m·k·d = k·dim cells — exactly ONE
+  /** All `m` subspace codebooks of lifted training frame `trainE`,
+    * trained from the same rows with [[Clustering]]'s arithmetic per
+    * subspace — same seeds (the k lowest-id vectors' subvectors), same
+    * argmax, same long sums, same driver division — so books are
+    * bit-identical in both regimes:
+    *  - `rows` present (`trainE`'s [[Clustering.collectBounded]]
+    *    result, at most [[Clustering.MaxCentroidCells]] cells): every
+    *    subspace's rounds run in driver memory ([[Clustering.lloyd]]),
+    *    so training is that one collect whatever `rounds` is;
+    *  - `rows` absent: [[distributedBooks]], one job per round for all
+    *    m subspaces.
+    * The centroid state is ≤ m·k·d = k·dim cells — exactly ONE
     * full-dim k-means' [[Clustering.MaxCentroidCells]] contract. */
-  private def trainBooks(e: DataFrame, m: Int, k: Int, rounds: Int,
-      d: Int, sampleFrac: Double): Seq[Seq[(Long, Array[Double])]] = {
+  private[pipeline] def trainBooks(trainE: DataFrame,
+      rows: Option[Array[Clustering.LiftedRow]], m: Int, k: Int, rounds: Int,
+      d: Int): Seq[Seq[(Long, Array[Double])]] = {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
     require(k.toLong * d * m <= Clustering.MaxCentroidCells,
       s"k×dim = ${k.toLong * d * m} exceeds the O(k×dim) driver-metadata " +
         s"contract (${Clustering.MaxCentroidCells} cells) — see " +
         "Clustering.MaxCentroidCells")
-    val trainE =
-      if (sampleFrac >= 1.0) e
-      else e.filter(Clustering.sampleGate(sampleFrac))
+    rows.fold(distributedBooks(trainE, m, k, rounds, d)) { rs =>
+      rs.foreach(r => require(r.fx == null || r.fx.length == m * d,
+        s"PQ dimension mismatch: vector ${r.id} has ${r.fx.length} " +
+          s"components, m×d = ${m * d}"))
+      (0 until m).map(mi => Clustering.lloyd(rs, k, rounds, mi * d, d))
+    }
+  }
+
+  /** The distributed regime of [[trainBooks]]: per Lloyd's round ONE
+    * job computes every subspace's assignment (m `argmax_dot` columns
+    * in one projection) and every subspace's exact per-(cluster, pos)
+    * integer sums (one (mi, cluster, pos)-keyed aggregate, collected
+    * once) — 2·m jobs per round → 1 (the r21 bench measured the PQ
+    * family dominated by those round trips, not by data). */
+  private[pipeline] def distributedBooks(trainE: DataFrame, m: Int, k: Int,
+      rounds: Int, d: Int): Seq[Seq[(Long, Array[Double])]] = {
     val seedRows = trainE.orderBy("vec_id").limit(k).select("fxd").collect()
+    require(seedRows.forall(!_.isNullAt(0)), "a k-means seed has a null embedding")
     var books: Seq[Seq[(Long, Array[Double])]] = (0 until m).map { mi =>
       seedRows.zipWithIndex.map { case (r, i) =>
         (i.toLong, r.getSeq[Double](0).slice(mi * d, mi * d + d).toArray)
       }.toSeq
     }
     for (_ <- 2 to rounds) {
-      val assign = array((0 until m).map(mi => subAssign(mi, books(mi), d)): _*)
       val rows = trainE
-        .select(assign.as("cs"), posexplode(col("fx")).as(Seq("pos", "v")))
+        .select(codesColumn(books, d).as("cs"), posexplode(col("fx")).as(Seq("pos", "v")))
         .select((col("pos") / d).cast("int").as("mi"),
           element_at(col("cs"), (col("pos") / d).cast("int") + 1).as("cluster"),
           (col("pos") % d).as("pos"), col("v"))
         .groupBy("mi", "cluster", "pos")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
+        .agg(coalesce(sum("v"), lit(0L)).as("s"), count(lit(1)).as("n"))
         .collect()
       val byMi = rows.groupBy(_.getInt(0))
       books = (0 until m).map { mi =>
@@ -272,34 +304,65 @@ object ProductQuant {
     * seam ([[adcScored]]'s convention for the cell-gated form). */
   private[graft] def ivfAdcScored(corpus: DataFrame, idCol: String,
       embCol: String, queryIds: Seq[Long], kCoarse: Int, coarseRounds: Int,
-      m: Int, k: Int, pqRounds: Int, dim: Int, nprobe: Int): DataFrame = {
+      m: Int, k: Int, pqRounds: Int, dim: Int, nprobe: Int): DataFrame =
+    ivfAdcScoredWithQueries(corpus, idCol, embCol, queryIds, kCoarse,
+      coarseRounds, m, k, pqRounds, dim, nprobe)._1
+
+  /** [[ivfAdcScored]] plus the (qid, fxd) query vectors it read, so
+    * the re-ranker reuses them instead of reading them again. The
+    * coarse quantizer and the codebooks both train on the lifted
+    * corpus, so in the driver regime the coarse rows, the PQ rows and
+    * the query vectors all come from ONE [[Clustering.collectBounded]]
+    * collect. */
+  private def ivfAdcScoredWithQueries(corpus: DataFrame, idCol: String,
+      embCol: String, queryIds: Seq[Long], kCoarse: Int, coarseRounds: Int,
+      m: Int, k: Int, pqRounds: Int, dim: Int,
+      nprobe: Int): (DataFrame, Seq[(Long, Array[Double])]) = {
     require(nprobe >= 1 && nprobe <= kCoarse,
       s"nprobe must be in [1, $kCoarse]: $nprobe")
     require(queryIds.nonEmpty && queryIds.size <= 1000,
       s"query batch of ${queryIds.size} exceeds the broadcast contract")
-    val e = Clustering.lifted(corpus, idCol, embCol)
-    val (assigned, coarse) = Clustering.trainAssign(e, kCoarse, coarseRounds)
-    val (codes, books) = codeArrays(corpus, idCol, embCol, m, k, pqRounds, dim)
+    val (e, rows, coarse, books) = ivfPqTrained(corpus, idCol, embCol,
+      kCoarse, coarseRounds, m, k, pqRounds, dim)
+    val qRows = Clustering.queryVectors(e, rows, queryIds)
+    val d = dim / m
     // (vec_id, cell, codes) — the slim retrieval table every query
     // branch filters; at deployment this is the persisted index.
-    val base = graft.ops.Materialize.barrier(
-      assigned.select(col("vec_id"), col("cluster").as("cell"))
-        .join(codes, "vec_id"))
-    val d = dim / m
-    val qRows = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id"), col("fxd")).collect()
+    val base = graft.ops.Materialize.barrier(cellCodes(e, coarse, books, d))
     val halfNorms = coarse.map { case (cid, c) => (cid, 0.5 * VecOps.normSq(c)) }
-    val (probes, luts) = qRows.map { r =>
-      val qid = r.getLong(0)
-      val fxd = r.getSeq[Double](1).toArray
+    val (probes, luts) = qRows.map { case (qid, fxd) =>
       val cells = coarse.zip(halfNorms).map { case ((cid, c), (_, hn)) =>
         (cid, VecOps.dot(fxd, c) - hn)
       }.sortBy { case (cid, s) => (-s, cid) }.take(nprobe).map(_._1)
       (cells.map(c => (qid, c)),
         (qid, lutFor(fxd, books, m, k, d).toSeq))
-    }.unzip match { case (ps, ls) => (ps.flatten.toSeq, ls.toSeq) }
-    ivfAdcScores(base, probes, luts, m, k)
+    }.unzip match { case (ps, ls) => (ps.flatten, ls) }
+    (ivfAdcScores(base, probes, luts, m, k), qRows)
   }
+
+  /** The lifted corpus, its [[Clustering.collectBounded]] rows, and
+    * the coarse centroids and PQ codebooks both trained on it — from
+    * that one collect in the driver regime, by the distributed rounds
+    * past it. */
+  private[pipeline] def ivfPqTrained(corpus: DataFrame, idCol: String,
+      embCol: String, kCoarse: Int, coarseRounds: Int, m: Int, k: Int,
+      pqRounds: Int, dim: Int): (DataFrame, Option[Array[Clustering.LiftedRow]],
+        Seq[(Long, Array[Double])], Seq[Seq[(Long, Array[Double])]]) = {
+    require(m >= 1 && dim % m == 0,
+      s"dim=$dim must split evenly into m=$m subspaces")
+    val e = Clustering.lifted(corpus, idCol, embCol)
+    val rows = Clustering.collectBounded(e)
+    (e, rows, Clustering.centroids(e, rows, kCoarse, coarseRounds),
+      trainBooks(e, rows, m, k, pqRounds, dim / m))
+  }
+
+  /** (vec_id, cell, codes): each vector's coarse cell and its m PQ
+    * codes, in one zero-shuffle projection of the lifted corpus. */
+  private[pipeline] def cellCodes(e: DataFrame, coarse: Seq[(Long, Array[Double])],
+      books: Seq[Seq[(Long, Array[Double])]], d: Int): DataFrame =
+    Clustering.withCluster(encodable(e, books), coarse)
+      .select(col("vec_id"), col("cluster").as("cell"),
+        codesColumn(books, d).as("codes"))
 
   /** The cell-gated batched ADC scorer the IVF forms share: the
     * (qid, cell) probe pairs and (qid, lut) tables both BROADCAST onto
@@ -356,17 +419,18 @@ object ProductQuant {
     require(topK >= 1 && topK <= shortlist,
       s"topK must be in [1, shortlist=$shortlist]: $topK")
     val spark = corpus.sparkSession
+    import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val ann = ivfAdcTopK(corpus, idCol, embCol, queryIds, kCoarse,
-      coarseRounds, m, k, pqRounds, dim, nprobe, shortlist)
+    val (scored, qRows) = ivfAdcScoredWithQueries(corpus, idCol, embCol,
+      queryIds, kCoarse, coarseRounds, m, k, pqRounds, dim, nprobe)
+    val ann = Similarity.topKPerQid(scored, shortlist)
     val e = Clustering.lifted(corpus, idCol, embCol)
     // Query vectors land as a local relation: ≤1000 rows by the batch
     // contract, and a derived plan would put the corpus subtree on both
     // sides of the rescore join (the SaltedJoin.autoJoin reasoning).
-    val qRows = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("qid"), col("fxd").as("qfxd"))
-    val qLocal = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.collect(): _*), qRows.schema)
+    // They are the ones the ADC pass read — no second read.
+    val qLocal = qRows.map { case (qid, fxd) => (qid, fxd.toSeq) }
+      .toDF("qid", "qfxd")
     val rescored = e
       .join(broadcast(ann.select(col("qid"), col("vec_id"))), "vec_id")
       .join(broadcast(qLocal), "qid")
@@ -437,19 +501,20 @@ object ProductQuant {
     require(queryIds.nonEmpty && queryIds.size <= 1000,
       s"query batch of ${queryIds.size} exceeds the broadcast contract")
     val e = Clustering.lifted(corpus, idCol, embCol)
-    val (assigned, coarse) = Clustering.trainAssign(e, kCoarse, coarseRounds)
+    // The coarse rows are the query rows: one collect in the driver
+    // regime (the residual rows are a second frame, a second collect).
+    val rows = Clustering.collectBounded(e)
+    val coarse = Clustering.centroids(e, rows, kCoarse, coarseRounds)
+    val assigned = Clustering.withCluster(e, coarse)
     val (codes, books) = codeArrays(residualCorpus(assigned, coarse),
       "vec_id", "emb", m, k, pqRounds, dim)
     val base = graft.ops.Materialize.barrier(
       assigned.select(col("vec_id"), col("cluster").as("cell"))
         .join(codes, "vec_id"))
     val d = dim / m
-    val qRows = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id"), col("fxd")).collect()
+    val qRows = Clustering.queryVectors(e, rows, queryIds)
     val halfNorms = coarse.map { case (cid, c) => (cid, c, 0.5 * VecOps.normSq(c)) }
-    val (probes, luts) = qRows.map { r =>
-      val qid = r.getLong(0)
-      val fxd = r.getSeq[Double](1).toArray
+    val (probes, luts) = qRows.map { case (qid, fxd) =>
       val cells = halfNorms.map { case (cid, c, hn) =>
         (cid, VecOps.dot(fxd, c) - hn)
       }.sortBy { case (cid, s) => (-s, cid) }.take(nprobe).map(_._1)
@@ -458,7 +523,7 @@ object ProductQuant {
       val coarseByCid = coarse.toMap
       (cells.map(c => (qid, c, VecOps.dot(fxd, coarseByCid(c)))),
         (qid, lutFor(fxd, books, m, k, d).toSeq))
-    }.unzip match { case (ps, ls) => (ps.flatten.toSeq, ls.toSeq) }
+    }.unzip match { case (ps, ls) => (ps.flatten, ls) }
     residualIvfAdcScores(base, probes, luts, m, k)
   }
 

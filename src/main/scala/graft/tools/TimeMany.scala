@@ -9,17 +9,22 @@ import graft.Harness
 /** Multi-query timing and profile probe for the SCALING.md rows:
   * `runMain graft.tools.TimeMany <q1,q2,...> [sfDir] [passes]` runs the
   * named registered queries with the Bench's methodology (an untimed
-  * warm-up pass, then `passes` interleaved timed passes through
-  * [[graft.Harness.time]], min per query) on `local[$SPARK_GRAFT_CPUS]`
+  * warm-up pass through [[graft.Harness.time]], then `passes`
+  * interleaved timed passes in the same loop, min per query) on
+  * `local[$SPARK_GRAFT_CPUS]`
   * over the archived record layout — one JVM for a whole query list, so
   * an 8-vs-32-core comparison at the 64× corpus is two invocations, not
   * 2×N. The warm-up line includes any one-time work, such as a sidecar
   * landing.
   *
-  * After the MIN lines it prints, for each query's final pass, every job
-  * with its wall time and every stage with task count, duration and
-  * input and shuffle bytes — the "where do the seconds go" view the
-  * totals can't give (the UI is disabled; this is its stand-in).
+  * After the MIN lines it prints, for each query's final pass, its
+  * construction (the wall time and jobs before the sink is entered: the
+  * eager driver jobs that build the DataFrame) apart from its execution
+  * (the sink's wall time and jobs), then every job with its wall time
+  * and every stage with task count, duration and input and shuffle
+  * bytes — the "where do the seconds go" view the totals can't give
+  * (the UI is disabled; this is its stand-in). A query that throws
+  * before its sink has no split line.
   * Dev-side only; the bench contract lives in [[graft.Bench]].
   */
 object TimeMany {
@@ -77,7 +82,24 @@ object TimeMany {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    val timed = Harness.time(spark, names, sfDir, passes)
+    // The timed passes are Harness.time's loop with a sink that stamps
+    // when it is entered: jobs started before that stamp are the
+    // query's construction, the rest its execution.
+    // name -> (epoch ms the sink was entered, construction seconds)
+    val entered = mutable.Map.empty[String, (Long, Double)]
+    val timed =
+      try (1 to passes).map { p =>
+        names.map { n =>
+          spark.sparkContext.setJobDescription(s"pass$p:$n")
+          entered -= n
+          val t0 = System.nanoTime()
+          n -> Harness.run(spark, n, sfDir) { df =>
+            entered(n) = (System.currentTimeMillis(), (System.nanoTime() - t0) / 1e9)
+            df.write.format("noop").mode("overwrite").save()
+          }
+        }.toMap
+      }
+      finally spark.sparkContext.setJobDescription(null)
     for ((pass, p) <- timed.zipWithIndex; n <- names) show(n, s"pass ${p + 1}", pass(n))
     names.foreach { n =>
       val ok = timed.map(_(n)).filter(_.error.isEmpty).map(_.seconds)
@@ -93,6 +115,11 @@ object TimeMany {
       val ids = js.map(_.id).toSet
       val nStages = stages.count(s => ids(s.jobId))
       println(f"\n===== $n pass $passes: ${timed.last(n).seconds}%.3f s, ${js.size} jobs, $nStages stages =====")
+      entered.get(n).foreach { case (at, c) =>
+        val (build, exec) = js.partition(_.start < at)
+        println(f"  construction ${c}%.3f s, ${build.size} jobs; " +
+          f"execution ${timed.last(n).seconds - c}%.3f s, ${exec.size} jobs")
+      }
       js.foreach { j =>
         val dur = if (j.end >= 0) (j.end - j.start) / 1e3 else -1.0
         val ss = stages.filter(_.jobId == j.id)

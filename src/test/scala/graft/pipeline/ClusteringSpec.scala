@@ -133,4 +133,13 @@ class ClusteringSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("driver-metadata"))
   }
+
+  test("k-means on an empty embeddings table is empty, as its DuckDB oracle") {
+    val empty = graft.core.Tables.load(spark, TestSpark.Sf, "embeddings").where(lit(false))
+    for (rounds <- Seq(1, 3)) {
+      val got = Clustering.kmeans(empty, "vec_id", "embedding", k = 8, rounds = rounds)
+      assert(got.columns.toSeq == Seq("vec_id", "cluster", "score"))
+      assert(got.collect().isEmpty)
+    }
+  }
 }

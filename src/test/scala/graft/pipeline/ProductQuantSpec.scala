@@ -219,4 +219,14 @@ class ProductQuantSpec extends AnyFunSuite {
     assert(sampledRecall >= fullRecall - 0.2,
       s"sampled recall $sampledRecall collapsed vs full $fullRecall")
   }
+
+  test("PQ encode of an empty embeddings table is empty, as its DuckDB oracle") {
+    val empty = emb.where(lit(false))
+    for (rounds <- Seq(1, 2)) {
+      val got = ProductQuant.encode(empty, "vec_id", "embedding", m = 8,
+        k = 16, rounds = rounds, dim = 64)
+      assert(got.columns.toSeq == Seq("vec_id", "m", "code"))
+      assert(got.collect().isEmpty)
+    }
+  }
 }
