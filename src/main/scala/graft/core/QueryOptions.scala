@@ -118,8 +118,14 @@ object QueryOptions {
     validate(opts)
   }
 
-  /** The reference's validation rules, same error strings (`cli.clj:61-66`). */
+  /** The reference's validation rules, same error strings (`cli.clj:61-66`),
+    * plus one of ours: a zero `print-offset`, which the progress sampler's
+    * `offset % n` would fail on mid-stream (ANSI `REMAINDER_BY_ZERO`)
+    * after `/search` has committed its 200. A negative one samples the
+    * multiples of its magnitude and stays allowed. */
   def validate(o: QueryOptions): QueryOptions = {
+    if (o.printOffset.contains(0L))
+      throw new IllegalArgumentException("--print-offset must not be 0")
     if (o.defaultPartition && o.keyRegex.isEmpty)
       throw new IllegalArgumentException("--default-partition requires --key-regex")
     if (o.defaultPartition && o.partitions.nonEmpty)

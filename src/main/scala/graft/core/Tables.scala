@@ -2,11 +2,15 @@ package graft.core
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md). All
@@ -37,38 +41,79 @@ object Tables {
     normalizeEventsTs(parquet(spark, s"$sfDir/$name.parquet"))
   }
 
-  private final case class Resolved(state: Seq[String], relation: BaseRelation)
+  /** One row group of a file under a [[parquet]] path, as the file's
+    * footer describes it: the file's partition-directory values by
+    * column name, the rows the group holds, and each column's statistics
+    * by dotted column path. */
+  final case class RowGroup(partition: Map[String, String], rows: Long,
+      stats: Map[String, Statistics[_]])
 
-  /** One resolved relation per (session, path). A session is a key by
+  /** A path as [[parquet]] resolved it: its relation and, read on first
+    * use, the row groups of the files that relation lists. */
+  final class Resolved private[Tables] (private[Tables] val state: Seq[String],
+      relation: HadoopFsRelation) {
+    /** A new DataFrame over the relation: fresh attribute ids, the
+      * relation's file listing. */
+    def frame: DataFrame = relation.sparkSession.baseRelationToDataFrame(relation)
+
+    /** Every row group of the files in the relation's own listing, from
+      * their parquet footers: read once, on the first call, with no Spark
+      * job. The frame and the row groups describe the same files. */
+    lazy val rowGroups: Seq[RowGroup] = {
+      val conf = relation.sparkSession.sessionState.newHadoopConf()
+      val keys = relation.partitionSchema.fields.toSeq
+      relation.location.listFiles(Nil, Nil).flatMap { dir =>
+        val partition = keys.zipWithIndex.map { case (k, i) =>
+          k.name -> String.valueOf(dir.values.get(i, k.dataType))
+        }.toMap
+        dir.files.flatMap { f =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f.fileStatus, conf))
+          try reader.getFooter.getBlocks.asScala.toSeq.map(b => RowGroup(partition,
+            b.getRowCount, b.getColumns.asScala.map(c =>
+              c.getPath.toDotString -> (c.getStatistics: Statistics[_])).toMap))
+          finally reader.close()
+        }
+      }
+    }
+  }
+
+  /** One resolved path per (session, path). A session is a key by
     * identity, so two sessions never share a relation (it carries its
     * session's conf). */
   private val resolved = new ConcurrentHashMap[(SparkSession, String), Resolved]()
 
-  /** A parquet file or directory as a DataFrame, with its
-    * `HadoopFsRelation` (file listing, partition discovery and the
-    * one-task schema-inference job) resolved ONCE per session and path.
+  /** A parquet file or directory as a DataFrame: [[resolve]]`(spark,
+    * path).frame`. */
+  def parquet(spark: SparkSession, path: String): DataFrame = resolve(spark, path).frame
+
+  /** A parquet file or directory with its `HadoopFsRelation` (file
+    * listing, partition discovery and the one-task schema-inference job)
+    * resolved ONCE per session and path, and its footers read at most
+    * once ([[Resolved.rowGroups]]).
     *
     * Keying and invalidation: the entry for (session, path) is kept
     * together with the path's [[fileState]] — name, length and mtime of
     * every file under it, recursively. A call whose state differs (an
     * archive rewritten in place, a regenerated fixture) resolves afresh
-    * and replaces the entry, so the memo holds at most one entry per
-    * (session, path) and never serves a stale listing. Entries of
-    * sessions whose context has stopped are dropped.
+    * and replaces the entry, footers included, so the memo holds at most
+    * one entry per (session, path) and never serves a stale listing.
+    * Entries of sessions whose context has stopped are dropped.
     *
-    * Every call wraps the relation in a new `LogicalRelation`
-    * (`baseRelationToDataFrame`), so each caller gets fresh attribute ids:
-    * two loads of one table in one query (a self-join) stay distinct.
+    * Every [[Resolved.frame]] wraps the relation in a new
+    * `LogicalRelation`, so each caller gets fresh attribute ids: two
+    * loads of one table in one query (a self-join) stay distinct.
     * DataFrames built before a rewrite still read the old files. */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  def resolve(spark: SparkSession, path: String): Resolved = {
     resolved.keySet.removeIf(_._1.sparkContext.isStopped)
     val state = fileState(spark, path)
-    val entry = resolved.compute((spark, path), (_, old) =>
+    resolved.compute((spark, path), (_, old) =>
       if (old != null && old.state == state) old
       // What `spark.read.parquet(path)` resolves, minus the DataFrame.
-      else Resolved(state, DataSource(spark, className = "parquet",
-        options = Map("path" -> path)).resolveRelation()))
-    spark.baseRelationToDataFrame(entry.relation)
+      else DataSource(spark, className = "parquet", options = Map("path" -> path))
+        .resolveRelation() match {
+          case r: HadoopFsRelation => new Resolved(state, r)
+          case r => throw new IllegalStateException(s"$path resolved to $r")
+        })
   }
 
   /** The paths [[parquet]] holds a relation for in `spark`. */

@@ -1,7 +1,6 @@
 package graft.log
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Murmur2, QueryOptions}
@@ -22,8 +21,13 @@ import graft.core.{Murmur2, QueryOptions}
   * Scale notes:
   *  - partition/offset/timestamp pruning happens before any regex work, so
   *    at 100 TB the expensive `RLike` only ever sees the pruned slice;
-  *  - the offset-boundary probe (S5) is a tiny per-partition aggregate,
-  *    broadcast back — no shuffle of the big side;
+  *  - the offset-boundary probe (S5) is a metadata lookup on the
+  *    archive layout: each partition's (min, max + 1) offset comes from
+  *    the row-group statistics in the parquet footers, read once per file
+  *    state, and the window is literal per-partition predicates on the
+  *    scan — one pass, no aggregate, no shuffle, no broadcast. Only a
+  *    frame with no archive files (the live synthesis, an in-memory
+  *    frame) probes by a per-partition aggregate broadcast back;
   *  - no collect, no driver loop: the plan is a single DAG.
   */
 object LogQuery {
@@ -35,9 +39,37 @@ object LogQuery {
 
   /** Resolve the pruned, windowed, record stream (pre-regex) — the stream
     * the reference's consumer loop actually "consumes" after assign+seek.
+    *
+    * When every topic keeps its partitions' offset bounds (the archive
+    * layout, [[RecordLog.seekable]]), a relative-offset window is known
+    * before the scan: it becomes literal `partition = p AND offset >= k`
+    * predicates on each topic's scan ([[seekTo]]), and no bounds stage
+    * runs. Otherwise [[consumedFrom]] derives the bounds from the rows.
     */
-  def consumed(spark: SparkSession, sfDir: String, opts: QueryOptions): DataFrame =
-    consumedFrom(RecordLog.topics(spark, sfDir, opts.topics), opts)
+  def consumed(spark: SparkSession, sfDir: String, opts: QueryOptions): DataFrame = {
+    val topics = opts.topics.map(RecordLog.seekable(spark, sfDir, _))
+    val sought = opts.relativeOffset.flatMap { n =>
+      val each = topics.map(t => t.bounds().map(b => t.records.filter(seekTo(b, n))))
+      Option.when(each.forall(_.isDefined))(each.flatten.reduce(_ union _))
+    }
+    sought match {
+      // Already windowed: the rest of the pipeline runs without A3.
+      case Some(recs) => consumedFrom(recs, opts.copy(relativeOffset = None))
+      case None => consumedFrom(topics.map(_.records).reduce(_ union _), opts)
+    }
+  }
+
+  /** A3 over known bounds: each partition's records from `earliest + n`
+    * (n >= 0) or `latest + n` (n < 0) on — the rows [[consumedFrom]]'s
+    * aggregate window keeps. A start past `Long.MaxValue` keeps nothing
+    * (the aggregate would fail on the overflow). A partition without
+    * bounds holds no record. */
+  private def seekTo(bounds: Map[Int, (Long, Long)], n: Long): Column =
+    bounds.toSeq.sorted.flatMap { case (p, (earliest, latest)) =>
+      val start = if (n >= 0) earliest + n else latest + n
+      Option.when(n < 0 || start >= earliest)(
+        col("partition") === p && col("offset") >= start)
+    }.reduceOption(_ || _).getOrElse(lit(false))
 
   /** The deserializer plug point (SURVEY §1.2): when the source delivers
     * BINARY key/value (a real Kafka source does), the configured
@@ -89,6 +121,9 @@ object LogQuery {
     // A3 relative-offset seek (`kafka.clj:111-123`): n >= 0 → earliest + n,
     // n < 0 → latest + n, where latest is the end position (max offset + 1),
     // matching KafkaConsumer.seekToEnd + position semantics.
+    // This is the general definition, for frames whose bounds only a scan
+    // can give (the live synthesis, in-memory frames); [[consumed]] seeks
+    // archived topics by their footer bounds instead.
     // Bounds are probed from the PRUNED slice, like the reference probing
     // only assigned partitions (`kafka.clj:99-109`) — probing the unpruned
     // union would scan every partition of every topic (VERDICT r2 item 4).

@@ -78,15 +78,36 @@ object RecordLog {
     * and row groups instead of filtering a computed column (layout
     * equivalence is oracle-checked by q08b). */
   def topic(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (spark.conf.getOption("spark.graft.recordSource").contains("archive")) {
-      val dir = spark.conf.getOption("spark.graft.archiveDir").getOrElse(
+    archiveDir(spark) match {
+      case Some(dir) => LogStore.topic(spark, dir, name)
+      case None if spark.conf.getOption("spark.graft.cacheRecordLog").contains("true") =>
+        cache.getOrElseUpdate((System.identityHashCode(spark).toString, sfDir, name),
+          build(spark, sfDir, name).cache())
+      case None => build(spark, sfDir, name)
+    }
+
+  /** A topic's records and, where its layout keeps them, each partition's
+    * offset bounds `(earliest, latest)`: min offset and max offset + 1.
+    * `bounds` is asked only by a request that seeks; it is `None` where
+    * only a scan could answer. */
+  final case class Seekable(records: DataFrame, bounds: () => Option[Map[Int, (Long, Long)]])
+
+  /** [[topic]] as a [[Seekable]]: the archive layout keeps its bounds in
+    * the parquet footers ([[LogStore.seekable]]); the live synthesis has
+    * none. */
+  def seekable(spark: SparkSession, sfDir: String, name: String): Seekable =
+    archiveDir(spark) match {
+      case Some(dir) => LogStore.seekable(spark, dir, name)
+      case None => Seekable(topic(spark, sfDir, name), () => None)
+    }
+
+  /** The archive `spark` reads topics from, when its record source is the
+    * archive layout. */
+  private def archiveDir(spark: SparkSession): Option[String] =
+    Option.when(spark.conf.getOption("spark.graft.recordSource").contains("archive"))(
+      spark.conf.getOption("spark.graft.archiveDir").getOrElse(
         throw new IllegalArgumentException(
-          "spark.graft.recordSource=archive requires spark.graft.archiveDir"))
-      LogStore.topic(spark, dir, name)
-    } else if (spark.conf.getOption("spark.graft.cacheRecordLog").contains("true"))
-      cache.getOrElseUpdate((System.identityHashCode(spark).toString, sfDir, name),
-        build(spark, sfDir, name).cache())
-    else build(spark, sfDir, name)
+          "spark.graft.recordSource=archive requires spark.graft.archiveDir")))
 
   /** The live synthesis of topic `name` from `sfDir`, whatever
     * `spark.graft.recordSource` says — what [[LogStore.materialize]]

@@ -23,29 +23,51 @@ object TestSpark {
 
   val Sf = "/root/testdata/sf0.001"
 
-  /** Jobs started on this thread while `body` runs. The listener bus is
-    * asynchronous, so a marker job under a second group is run after the
-    * body: once the listener has seen it, it has seen every earlier job. */
-  def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+  /** A new session (its own conf and resolved relations) whose record
+    * log is the archive under `dir` (`spark.graft.recordSource=archive`). */
+  def onArchive(dir: String): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.recordSource", "archive")
+    s.conf.set("spark.graft.archiveDir", dir)
+    s
+  }
+
+  /** The job group a job started in ("" for none). */
+  def group(e: SparkListenerJobStart): String =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+
+  /** The start events of every job started while `body` runs, in any job
+    * group and on any thread (a broadcast runs its job in a group of its
+    * own). The listener bus is asynchronous, so a marker job under a
+    * group of its own is run after the body: once the listener has seen
+    * it, it has seen every earlier job. */
+  def jobsStarted(s: SparkSession)(body: => Unit): Seq[SparkListenerJobStart] = {
     val sc = s.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
+    val started = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e)
     }
-    val probe = s"jobs-during-${java.util.UUID.randomUUID()}"
-    val marker = s"$probe-marker"
+    val marker = s"jobs-started-marker-${java.util.UUID.randomUUID()}"
+    def seen = started.asScala.exists(group(_) == marker)
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(probe, "counted body", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
+      body
       sc.setJobGroup(marker, "listener marker", interruptOnCancel = false)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val until = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(marker) && System.nanoTime() < until) Thread.sleep(10)
-      assert(groups.contains(marker), "the listener never saw the marker job")
-      groups.asScala.count(_ == probe)
+      while (!seen && System.nanoTime() < until) Thread.sleep(10)
+      assert(seen, "the listener never saw the marker job")
+      started.asScala.toSeq.filter(group(_) != marker)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Jobs started on this thread while `body` runs. */
+  def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+    val sc = s.sparkContext
+    val probe = s"jobs-during-${java.util.UUID.randomUUID()}"
+    jobsStarted(s) {
+      sc.setJobGroup(probe, "counted body", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+    }.count(group(_) == probe)
   }
 }

@@ -38,6 +38,16 @@ class QueryOptionsSpec extends AnyFunSuite {
     assert(e.getMessage == "--start-timestamp / --relative-offset not intended for use together")
   }
 
+  test("--print-offset 0 rejected (offset % 0 would fail mid-stream); a negative one stays") {
+    val e = intercept[IllegalArgumentException](
+      QueryOptions.fromMap(base + ("print-offset" -> "0")))
+    assert(e.getMessage == "--print-offset must not be 0")
+    val cli = intercept[IllegalArgumentException](QueryOptions.parse(Seq(
+      "--bootstrap-servers", "b", "--topics", "t", "--print-offset", "0")))
+    assert(cli.getMessage == e.getMessage)
+    assert(QueryOptions.fromMap(base + ("print-offset" -> "-5")).printOffset.contains(-5L))
+  }
+
   test("unknown option rejected") {
     intercept[IllegalArgumentException](QueryOptions.fromMap(base + ("frobnicate" -> "1")))
   }

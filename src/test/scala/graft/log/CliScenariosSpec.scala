@@ -75,6 +75,34 @@ class CliScenariosSpec extends AnyFunSuite {
     assert(run(opts("partitions" -> "3")).map(_.getAs[String]("value")) == Seq("v2"))
   }
 
+  /** The same topic archived as [[LogStore]] lays it out, read through a
+    * session on the archive layout: the relative-offset window seeks by
+    * the footers' offset bounds instead of aggregating the rows. */
+  private lazy val archived = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-archive").toString
+    topicA.write.partitionBy("partition").parquet(s"$dir/topic-a")
+    TestSpark.onArchive(dir)
+  }
+
+  private def runArchived(o: QueryOptions): Seq[Row] = {
+    val df = LogQuery.canonical(LogQuery.results(archived, o.bootstrapServers, o))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("HashAggregate") && !plan.contains("BroadcastExchange"), plan)
+    df.collect().toSeq
+  }
+
+  test("scenario 5 on the archived layout: the seek by footer bounds skips offset 0") {
+    val o = opts("relative-offset" -> "1")
+    assert(runArchived(o).map(_.getAs[String]("value")) == Seq("v1"))
+    assert(runArchived(o) == run(o))
+  }
+
+  test("scenario 6 on the archived layout: explicit pruning finds v2") {
+    val o = opts("partitions" -> "3")
+    assert(runArchived(o).map(_.getAs[String]("value")) == Seq("v2"))
+    assert(runArchived(o) == run(o))
+  }
+
   test("pruning + relative offset compose: bounds come from the pruned slice") {
     // Only k0's partition is assigned; relative offset 1 seeks earliest+1
     // WITHIN that partition → exactly v1 (k2's partition never probed).

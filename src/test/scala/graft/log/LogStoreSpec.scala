@@ -107,4 +107,33 @@ class LogStoreSpec extends AnyFunSuite {
     assert(Tables.resolvedPaths(spark).count(_ == s"$dir/events") === 1,
       "the superseded entry is dropped")
   }
+
+  test("an archive rewritten in place: the next tail request seeks by the new bounds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite-tail").toString
+    LogStore.materialize(spark, TestSpark.Sf, dir, Seq("events"))
+    val s = TestSpark.onArchive(dir)
+    val tail = QueryOptions(bootstrapServers = TestSpark.Sf, topics = Seq("events"),
+      relativeOffset = Some(-3L))
+    def sought(): Seq[String] = {
+      val df = LogQuery.consumed(s, TestSpark.Sf, tail)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("HashAggregate"), s"not sought by footer bounds: $plan")
+      ordered(df)
+    }
+    def ordered(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.orderBy("partition", "offset").collect().map(_.mkString("|")).toSeq
+    def aggregated(): Seq[String] =
+      ordered(LogQuery.consumedFrom(LogStore.topic(s, dir, "events"), tail))
+    val before = sought()
+    assert(before == aggregated() && before.nonEmpty)
+    val sf2 = java.nio.file.Files.createTempDirectory("graft-rewrite-tail-sf").toString
+    Tables.load(spark, TestSpark.Sf, "events").orderBy("event_id").limit(100)
+      .write.parquet(s"$sf2/events.parquet")
+    LogStore.materialize(spark, sf2, dir, Seq("events"))
+    val after = sought()
+    assert(after != before, "the tail still seeks by the old bounds")
+    assert(after == aggregated() && after.nonEmpty)
+    assert(Tables.resolvedPaths(s).count(_ == s"$dir/events") === 1,
+      "the superseded entry, footers included, is dropped")
+  }
 }

@@ -1,17 +1,22 @@
 package graft.log
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.core.QueryOptions
+import graft.render.JsonArrayRender
 
 /** Building a `/search` plan runs no Spark job: `HttpService` builds and
   * analyzes it before the response commits, outside any deadline group.
   * Once a session has resolved a topic's parquet relation
   * (`Tables.parquet`), a build lists no files and runs no
   * schema-inference job — on the archived layout and on the live one, for
-  * one topic and for two. */
+  * one topic and for two. A warm archived tail (`relative-offset`) request
+  * finds its seek positions in the kept parquet footers: it too builds
+  * with 0 jobs, and it executes as nothing but the per-partition render
+  * jobs — no bounds aggregate, shuffle or broadcast. */
 class SearchBuildJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val store = {
@@ -20,22 +25,23 @@ class SearchBuildJobsSpec extends AnyFunSuite {
     dir
   }
 
-  private def build(s: SparkSession, topics: Seq[String]): Unit = {
-    val opts = QueryOptions(bootstrapServers = TestSpark.Sf, topics = topics,
-      keyRegex = Some("13"))
-    LogQuery.stream(s, opts.bootstrapServers, opts).schema
-  }
+  private def opts(topics: Seq[String], tail: Boolean): QueryOptions =
+    QueryOptions(bootstrapServers = TestSpark.Sf, topics = topics,
+      keyRegex = Option.when(!tail)("13"),
+      relativeOffset = Option.when(tail)(-100L))
+
+  /** The `/search` frame, as the route builds it. */
+  private def searchFrame(s: SparkSession, o: QueryOptions): DataFrame =
+    LogQuery.stream(s, o.bootstrapServers, o)
+      .sortWithinPartitions("type", "topic", "partition", "offset")
+
+  private def build(s: SparkSession, topics: Seq[String], tail: Boolean = false): Unit =
+    searchFrame(s, opts(topics, tail)).schema
 
   /** A fresh session (its own conf and its own resolved relations) on the
     * archived layout, or on the live one when `archive` is false. */
-  private def session(archive: Boolean): SparkSession = {
-    val s = spark.newSession()
-    if (archive) {
-      s.conf.set("spark.graft.recordSource", "archive")
-      s.conf.set("spark.graft.archiveDir", store)
-    }
-    s
-  }
+  private def session(archive: Boolean): SparkSession =
+    if (archive) TestSpark.onArchive(store) else spark.newSession()
 
   for ((layout, archive) <- Seq("archived" -> true, "live" -> false);
        topics <- Seq(Seq("events"), Seq("events", "clicks"))) {
@@ -47,4 +53,25 @@ class SearchBuildJobsSpec extends AnyFunSuite {
       assert(TestSpark.jobsDuring(s)(build(s, topics)) == 0)
     }
   }
+
+  for (topics <- Seq(Seq("events"), Seq("events", "clicks")))
+    test(s"archived layout, ${topics.mkString("+")}: a warm tail request builds with 0 jobs " +
+        "and renders with one single-task job per output partition") {
+      val s = session(archive = true)
+      assert(TestSpark.jobsDuring(s)(build(s, topics, tail = true)) >= 1)
+      // Warm: the footer bounds are read and kept with the relation.
+      assert(TestSpark.jobsDuring(s)(build(s, topics, tail = true)) == 0)
+      val df = searchFrame(s, opts(topics, tail = true))
+      val parts = df.queryExecution.executedPlan.execute().getNumPartitions
+      val body = new java.io.ByteArrayOutputStream()
+      // Every job in any group: a broadcast would run under its own.
+      val jobs = TestSpark.jobsStarted(s)(JsonArrayRender.render(df, body.write(_)))
+      assert(new ObjectMapper().readTree(body.toByteArray).size() > 1,
+        "the tail rendered no record")
+      assert(jobs.size == parts, jobs.map(_.stageInfos.map(_.name)))
+      assert(jobs.forall(j => j.stageInfos.map(_.numTasks) == Seq(1)),
+        jobs.map(_.stageInfos.map(i => s"${i.name}:${i.numTasks}")))
+      val plan = df.queryExecution.executedPlan.toString
+      Seq("Exchange", "HashAggregate", "Join").foreach(op => assert(!plan.contains(op), plan))
+    }
 }
