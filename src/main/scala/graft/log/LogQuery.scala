@@ -11,7 +11,10 @@ import graft.core.{Murmur2, QueryOptions}
   *
   *   scan (S1/S2) → partition pruning (A1/A2) → offset window (A3/A4, S5)
   *   → timestamp window (L5) → regex filters (P2/P3) → projection (P1)
-  *   ∪ progress sampler (P6)
+  *
+  * With a progress sampler (P6) the last two steps are one projection:
+  * each record explodes into its progress row, its result row, both or
+  * neither.
   *
   * Everything is a stock `Column` expression, so Catalyst pushes the
   * prunable predicates (partition, offset, timestamp) into the parquet
@@ -154,38 +157,40 @@ object LogQuery {
     resultsFrom(consumed(spark, sfDir, opts), opts)
 
   /** Regex filters + result projection over a pre-consumed stream. */
-  def resultsFrom(scanned: DataFrame, opts: QueryOptions): DataFrame = {
-    scanned
-      .where(opts.keyRegex.map(r => col("key").rlike(anchored(r))).getOrElse(lit(true)))
-      .where(opts.valRegex.map(r => col("value").rlike(anchored(r))).getOrElse(lit(true)))
-      .select(lit("result").as("type"),
-        col("topic"), col("partition"), col("offset"), col("timestamp"),
-        col("key"), col("value"))
-  }
+  def resultsFrom(scanned: DataFrame, opts: QueryOptions): DataFrame =
+    scanned.where(matches(opts)).select(lit("result").as("type") +: recordColumns: _*)
 
-  /** Full output stream: results ∪ progress heartbeats. Progress rows (P6,
-    * `search.clj:95-101`) sample the *consumed* stream — every record with
-    * `offset % printOffset == 0` regardless of regex match — typed
+  /** The regex filters (P2/P3): both anchored, each only when given. */
+  private def matches(opts: QueryOptions): Column =
+    (opts.keyRegex.map(r => col("key").rlike(anchored(r))) ++
+      opts.valRegex.map(r => col("value").rlike(anchored(r)))).reduceOption(_ && _)
+      .getOrElse(lit(true))
+
+  private def recordColumns: Seq[Column] =
+    Seq("topic", "partition", "offset", "timestamp", "key", "value").map(col)
+
+  /** Full output stream: results and progress heartbeats. Progress rows
+    * (P6, `search.clj:95-101`) sample the *consumed* stream — every record
+    * with `offset % printOffset == 0` regardless of regex match — typed
     * `:offset`, like the reference emitting them before the regex check
     * (`search.clj:176`).
     */
   def stream(spark: SparkSession, sfDir: String, opts: QueryOptions): DataFrame =
     streamFrom(consumed(spark, sfDir, opts), opts)
 
-  /** results ∪ progress over a pre-consumed stream. */
-  def streamFrom(scanned: DataFrame, opts: QueryOptions): DataFrame = {
-    val res = resultsFrom(scanned, opts)
+  /** Results and progress over a pre-consumed stream, in one projection of
+    * one scan: each record explodes into its 0–2 output types, `offset`
+    * before `result` as the reference emits them. */
+  def streamFrom(scanned: DataFrame, opts: QueryOptions): DataFrame =
     opts.printOffset match {
       case Some(n) =>
-        val progress = scanned
-          .filter(col("offset") % lit(n) === 0)
-          .select(lit("offset").as("type"),
-            col("topic"), col("partition"), col("offset"), col("timestamp"),
-            col("key"), col("value"))
-        res.unionByName(progress)
-      case None => res
+        val matched = matches(opts)
+        val types = when(col("offset") % lit(n) === 0,
+          when(matched, array(lit("offset"), lit("result"))).otherwise(array(lit("offset"))))
+          .otherwise(when(matched, array(lit("result"))))
+        scanned.select(explode(types).as("type") +: recordColumns: _*)
+      case None => resultsFrom(scanned, opts)
     }
-  }
 
   /** Canonical deterministic output order (the reference's output order is
     * poll interleaving — nondeterministic; the oracle contract fixes it,

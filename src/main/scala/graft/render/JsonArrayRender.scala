@@ -4,9 +4,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
   OutputStream, StringWriter}
 import java.nio.charset.StandardCharsets
 
-import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.{JsonGenerator, StreamReadConstraints}
 import com.fasterxml.jackson.core.io.SerializedString
 import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.core.util.DefaultIndenter
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -18,6 +19,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's chunked JSON-array output format (S6/P7):
@@ -37,7 +39,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * time, so the result set is never materialized on the driver — the same
   * no-server-side-buffering property as the reference's streaming loop.
   * The request thread writes each row once, straight into its final
-  * `", " + pretty JSON` UTF-8 bytes; no JSON text is built and parsed back.
+  * `", " + pretty JSON` UTF-8 bytes ([[RecordFormat]]). A row whose
+  * key/value JSON stays within a subset Jackson prints back token for
+  * token is copied byte by byte into the printer's layout, with no parse
+  * tree and no generator; any other row is written whole by Jackson's tree
+  * parser and pretty printer. [[renderRecord]], over the row's `to_json`
+  * text, is the reference both are held to.
   *
   * Output goes to a chunk sink: each call is one chunk (one HTTP chunk on
   * the routes), a fresh array the sink may keep. `[`, the pioneer and `]`
@@ -65,10 +72,30 @@ object JsonArrayRender {
     .`with`(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8)
     .without(JsonGenerator.Feature.AUTO_CLOSE_TARGET)
 
-  private val Comma = ", ".getBytes(StandardCharsets.UTF_8)
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
+  private val Comma = utf8(", ")
   private val Escape = UTF8String.fromString("\\u")
 
-  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+  // The byte path's layout: DefaultPrettyPrinter's, with its line break.
+  private val Eol = utf8(DefaultIndenter.SYS_LF)
+  private val OpenRecord = utf8(", {")
+  private val CloseRecord = Array.concat(Eol, utf8("}"))
+  private val CloseEmpty = utf8(" }")
+  private val Colon = utf8(" : ")
+  private val EmptyObject = utf8("{ }")
+  private val EmptyArray = utf8("[ ]")
+  private val OpenArray = utf8("[ ")
+  private val CloseArray = utf8(" ]")
+  private val True = utf8("true")
+  private val False = utf8("false")
+  private val Null = utf8("null")
+  private val MaxDigits = 18
+  private val MaxDepth = 32
+  private val MaxKeys = 64
+  /** Jackson's read limit on a name; a longer one fails the parse, and a
+    * text this short holds no string past its string limit either. */
+  private val MaxScanned = StreamReadConstraints.DEFAULT_MAX_NAME_LEN
 
   /** Try-parse a JSON-ish text the way cheshire's parse-string does: any
     * valid JSON value (object, array, number, bool, null) replaces the
@@ -168,16 +195,42 @@ object JsonArrayRender {
 
   /** Writes a row of a record frame as `", "` and its pretty JSON, with the
     * bytes `renderRecord` makes of the row's `to_json` text, encoded as
-    * UTF-8: null fields omitted, string `key`/`value` try-parsed. One
-    * generator per record: a generator reused across records writes the
-    * printer's root separator before every record after the first.
+    * UTF-8: null fields omitted, string `key`/`value` try-parsed.
     *
-    * A row's strings are valid UTF-8, but a `\uXXXX` escape in a parsed
-    * key or value can stand for a lone surrogate. The char-based printer
-    * writes it as is and the encoding turns it into `?`, while the UTF-8
-    * generator fails on it or escapes it. So a record whose key or value
-    * holds `\u` is written by the char-based printer and then encoded. */
-  private final class RecordFormat(schema: StructType) {
+    * The byte path ([[encode]]) writes a row's final bytes into one reused
+    * buffer, in one pass over its fields:
+    *  - field names and separators are byte templates made once from the
+    *    schema, in `DefaultPrettyPrinter`'s layout;
+    *  - ints and longs are ASCII digits;
+    *  - a string field is copied between quotes when it is printable
+    *    ASCII without a quote or backslash, which Jackson writes unescaped;
+    *  - a `key` or `value` is scanned once in a subset of JSON that Jackson
+    *    reads and prints back token for token, and its tokens are copied
+    *    into the printer's layout: object entries one per line, indented
+    *    two spaces per object level; arrays inline as `[ a, b ]`; `{ }`
+    *    and `[ ]` when empty. The subset: objects without duplicate keys,
+    *    arrays, `true`, `false`, `null`, integers of at most [[MaxDigits]]
+    *    digits without a leading zero and other than `-0`, strings of
+    *    printable ASCII without a backslash, nothing but whitespace after
+    *    the value, at most [[MaxDepth]] containers deep, [[MaxKeys]] keys
+    *    in the open objects and [[MaxScanned]] bytes.
+    *
+    * Any other row goes whole to the fields path ([[fields]]), which
+    * parses each `key`/`value` to a Jackson tree and prints the record with
+    * a new pretty generator (one reused across records writes the
+    * printer's root separator before every record after the first). It
+    * takes a float, an escape, a duplicate key, trailing tokens, deeper
+    * nesting, a `key` or `value` that is not JSON (`user-7`, an empty text;
+    * the fields path writes it as a string) and any string with a byte
+    * that needs an escape or is not ASCII (a malformed UTF-8 one decodes to
+    * U+FFFD in the row's text).
+    *
+    * On that path a `\uXXXX` escape in a parsed key or value can stand for
+    * a lone surrogate. The char-based printer writes it as is and the
+    * encoding turns it into `?`, while the UTF-8 generator fails on it or
+    * escapes it. So a record whose key or value holds `\u` is written by
+    * the char-based printer and then encoded. */
+  private[render] final class RecordFormat(schema: StructType) {
     private val types: Array[DataType] = schema.fields.map { f =>
       f.dataType match {
         case _: StringType | IntegerType | LongType => f.dataType
@@ -187,15 +240,241 @@ object JsonArrayRender {
     }
     private val names = schema.fields.map(f => new SerializedString(f.name))
     private val parsed = schema.fields.map(f => f.name == "key" || f.name == "value")
+    /** Per field: its line, indent and quoted name, then the separator. */
+    private val heads =
+      names.map(n => Array.concat(Eol, utf8("  \""), n.asQuotedUTF8(), utf8("\""), Colon))
 
-    def write(row: InternalRow, out: OutputStream): Unit = {
-      out.write(Comma)
-      if (parsed.indices.exists(i =>
-          parsed(i) && !row.isNullAt(i) && row.getUTF8String(i).contains(Escape))) {
-        val chars = new StringWriter
-        fields(row, prettyWriter.createGenerator(chars))
-        out.write(utf8(chars.toString))
-      } else fields(row, recordWriter.createGenerator(out))
+    /** The byte path's output: `size` bytes of `buf`. */
+    private var buf = new Array[Byte](1024)
+    private var size = 0
+    /** The text being written: `len` bytes at `start` of `base`; `p` is the
+      * scanner's position in it. */
+    private var base: AnyRef = _
+    private var start = 0L
+    private var len = 0
+    private var p = 0
+    /** The keys of the objects the scanner is in, as `[from, to)` ranges of
+      * the text; `keys` of them are in use. */
+    private val keyFrom = new Array[Int](MaxKeys)
+    private val keyTo = new Array[Int](MaxKeys)
+    private var keys = 0
+    private val digitBytes = new Array[Byte](20)
+
+    def write(row: InternalRow, out: OutputStream): Unit =
+      if (encode(row)) out.write(buf, 0, size)
+      else {
+        out.write(Comma)
+        if (parsed.indices.exists(i =>
+            parsed(i) && !row.isNullAt(i) && row.getUTF8String(i).contains(Escape))) {
+          val chars = new StringWriter
+          fields(row, prettyWriter.createGenerator(chars))
+          out.write(utf8(chars.toString))
+        } else fields(row, recordWriter.createGenerator(out))
+      }
+
+    /** Writes `row` by the byte path into `buf`; false if the row needs
+      * the fields path. */
+    private[render] def encode(row: InternalRow): Boolean = {
+      size = 0
+      put(OpenRecord)
+      var first = true
+      var i = 0
+      while (i < types.length) {
+        if (!row.isNullAt(i)) {
+          if (!first) put(',')
+          first = false
+          put(heads(i))
+          types(i) match {
+            case IntegerType => digits(row.getInt(i).toLong)
+            case LongType => digits(row.getLong(i))
+            case _ =>
+              load(row.getUTF8String(i))
+              if (!(if (parsed(i)) keyOrValue() else quoted())) return false
+          }
+        }
+        i += 1
+      }
+      put(if (first) CloseEmpty else CloseRecord)
+      true
+    }
+
+    private def room(n: Int): Unit =
+      if (size + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, size + n))
+
+    private def put(b: Int): Unit = {
+      room(1)
+      buf(size) = b.toByte
+      size += 1
+    }
+
+    private def put(bytes: Array[Byte]): Unit = {
+      room(bytes.length)
+      System.arraycopy(bytes, 0, buf, size, bytes.length)
+      size += bytes.length
+    }
+
+    private def digits(v: Long): Unit =
+      if (v == Long.MinValue) put(utf8(v.toString))
+      else {
+        var x = math.abs(v)
+        var k = digitBytes.length
+        while ({ k -= 1; digitBytes(k) = ('0' + x % 10).toByte; x /= 10; x != 0 }) ()
+        if (v < 0) { k -= 1; digitBytes(k) = '-' }
+        room(digitBytes.length - k)
+        System.arraycopy(digitBytes, k, buf, size, digitBytes.length - k)
+        size += digitBytes.length - k
+      }
+
+    private def load(s: UTF8String): Unit = {
+      base = s.getBaseObject
+      start = s.getBaseOffset
+      len = s.numBytes
+      p = 0
+    }
+
+    /** The text's byte at `i` as 0-255, or -1 past its end. */
+    private def at(i: Int): Int = if (i < len) Platform.getByte(base, start + i) & 0xff else -1
+
+    /** Copies the text's bytes `[from, to)`. */
+    private def copy(from: Int, to: Int): Unit = {
+      room(to - from)
+      Platform.copyMemory(base, start + from, buf, Platform.BYTE_ARRAY_OFFSET + size, to - from)
+      size += to - from
+    }
+
+    /** The whole text as a JSON string; false unless it is printable ASCII
+      * without a quote or backslash, which needs no escape. */
+    private def quoted(): Boolean = {
+      var i = 0
+      var b = at(i)
+      while (b >= 0x20 && b <= 0x7e && b != '"' && b != '\\') { i += 1; b = at(i) }
+      i == len && { put('"'); copy(0, len); put('"'); true }
+    }
+
+    /** A `key` or `value` text in the scanned subset, copied into the
+      * printer's layout. */
+    private def keyOrValue(): Boolean = len <= MaxScanned && {
+      keys = 0
+      skipSpace()
+      value(1, 0) && { skipSpace(); p == len }
+    }
+
+    private def skipSpace(): Unit = {
+      var b = at(p)
+      while (b == ' ' || b == '\n' || b == '\r' || b == '\t') { p += 1; b = at(p) }
+    }
+
+    /** One value at `p`, inside `level` objects and `depth` containers. */
+    private def value(level: Int, depth: Int): Boolean = {
+      val b = at(p)
+      if (b == '{') depth < MaxDepth && obj(level + 1, depth + 1)
+      else if (b == '[') depth < MaxDepth && arr(level, depth + 1)
+      else if (b == '"') str()
+      else if (b == 't') word(True)
+      else if (b == 'f') word(False)
+      else if (b == 'n') word(Null)
+      else int()
+    }
+
+    private def obj(level: Int, depth: Int): Boolean = {
+      p += 1
+      skipSpace()
+      if (at(p) == '}') { p += 1; put(EmptyObject); return true }
+      put('{')
+      val opened = keys
+      var more = true
+      while (more) {
+        newline(level)
+        val key = p
+        if (!str() || !fresh(opened, key + 1, p - 1)) return false
+        skipSpace()
+        if (at(p) != ':') return false
+        p += 1
+        skipSpace()
+        put(Colon)
+        if (!value(level, depth)) return false
+        skipSpace()
+        if (at(p) == ',') { p += 1; skipSpace(); put(',') }
+        else if (at(p) == '}') { p += 1; more = false }
+        else return false
+      }
+      keys = opened
+      newline(level - 1)
+      put('}')
+      true
+    }
+
+    private def arr(level: Int, depth: Int): Boolean = {
+      p += 1
+      skipSpace()
+      if (at(p) == ']') { p += 1; put(EmptyArray); return true }
+      put(OpenArray)
+      var more = true
+      while (more) {
+        if (!value(level, depth)) return false
+        skipSpace()
+        if (at(p) == ',') { p += 1; skipSpace(); put(Comma) }
+        else if (at(p) == ']') { p += 1; more = false }
+        else return false
+      }
+      put(CloseArray)
+      true
+    }
+
+    private def newline(level: Int): Unit = {
+      put(Eol)
+      var i = 0
+      while (i < level) { put(' '); put(' '); i += 1 }
+    }
+
+    /** Records the key `[from, to)` of the object opened at `opened`;
+      * false if that object has it already or the key table is full. */
+    private def fresh(opened: Int, from: Int, to: Int): Boolean = {
+      var k = opened
+      while (k < keys) {
+        if (keyTo(k) - keyFrom(k) == to - from) {
+          var i = 0
+          while (i < to - from && at(keyFrom(k) + i) == at(from + i)) i += 1
+          if (i == to - from) return false
+        }
+        k += 1
+      }
+      keys < MaxKeys && {
+        keyFrom(keys) = from
+        keyTo(keys) = to
+        keys += 1
+        true
+      }
+    }
+
+    /** A string of printable ASCII without a backslash, copied. */
+    private def str(): Boolean = at(p) == '"' && {
+      val from = p
+      p += 1
+      var b = at(p)
+      while (b >= 0x20 && b <= 0x7e && b != '"' && b != '\\') { p += 1; b = at(p) }
+      b == '"' && { p += 1; copy(from, p); true }
+    }
+
+    /** `true`, `false` or `null`; what may follow is the caller's check. */
+    private def word(w: Array[Byte]): Boolean = {
+      var i = 0
+      while (i < w.length && at(p + i) == w(i)) i += 1
+      i == w.length && { p += w.length; put(w); true }
+    }
+
+    /** An integer of 1 to [[MaxDigits]] digits, no leading zero, not `-0`;
+      * a fraction or exponent fails the caller's check of what follows. */
+    private def int(): Boolean = {
+      val from = p
+      if (at(p) == '-') p += 1
+      val first = p
+      if (at(p) == '0') p += 1
+      else while (at(p) >= '0' && at(p) <= '9') p += 1
+      val n = p - first
+      n >= 1 && n <= MaxDigits && !(n == 1 && at(first) == '0' && first > from) &&
+        { copy(from, p); true }
     }
 
     private def fields(row: InternalRow, g: JsonGenerator): Unit = {

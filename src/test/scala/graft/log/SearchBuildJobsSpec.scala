@@ -16,7 +16,9 @@ import graft.render.JsonArrayRender
   * one topic and for two. A warm archived tail (`relative-offset`) request
   * finds its seek positions in the kept parquet footers: it too builds
   * with 0 jobs, and it executes as nothing but the per-partition render
-  * jobs — no bounds aggregate, shuffle or broadcast. */
+  * jobs — no bounds aggregate, shuffle or broadcast. A `print-offset`
+  * request reads its slice in one scan, not one for results and one for
+  * progress rows. */
 class SearchBuildJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val store = {
@@ -74,4 +76,29 @@ class SearchBuildJobsSpec extends AnyFunSuite {
       val plan = df.queryExecution.executedPlan.toString
       Seq("Exchange", "HashAggregate", "Join").foreach(op => assert(!plan.contains(op), plan))
     }
+
+  test("a print-offset request scans once: progress and result rows from one projection") {
+    val s = session(archive = true)
+    val o = QueryOptions.parseQueryString(s"bootstrap-servers=${TestSpark.Sf}" +
+      "&topics=events&partitions=2,5&print-offset=50&key-regex=1[0-9]")
+    val df = searchFrame(s, o)
+    assert(!df.schema("type").nullable)
+    val scans = df.queryExecution.sparkPlan.collect {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec => scan
+    }
+    assert(scans.size == 1, df.queryExecution.sparkPlan)
+    // The same rows as results ∪ progress, the two-scan definition.
+    val consumed = LogQuery.consumed(s, o.bootstrapServers, o)
+    val union = LogQuery.resultsFrom(consumed, o).unionByName(consumed
+      .filter(org.apache.spark.sql.functions.col("offset") % 50 === 0)
+      .selectExpr("'offset' AS type", "topic", "partition", "offset", "timestamp", "key",
+        "value"))
+    assert(df.exceptAll(union).isEmpty && union.exceptAll(df).isEmpty)
+    assert(df.filter("type = 'offset'").count() > 0 && df.filter("type = 'result'").count() > 0)
+    val parts = df.queryExecution.executedPlan.execute().getNumPartitions
+    val body = new java.io.ByteArrayOutputStream()
+    val jobs = TestSpark.jobsStarted(s)(JsonArrayRender.render(df, body.write(_)))
+    assert(jobs.size == parts && jobs.forall(_.stageInfos.map(_.numTasks) == Seq(1)),
+      jobs.map(_.stageInfos.map(i => s"${i.name}:${i.numTasks}")))
+  }
 }

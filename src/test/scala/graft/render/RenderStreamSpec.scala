@@ -220,7 +220,10 @@ class RenderStreamSpec extends AnyFunSuite {
       assert(body.contains(text), text)
   }
 
-  /** A record frame of edge values over 3 partitions, no shuffle. */
+  /** A record frame of edge values over 3 partitions, no shuffle. Key and
+    * value are BINARY cast to strings, as the deserializer casts a Kafka
+    * source's, so the last records' malformed UTF-8 stays in the strings
+    * (their text decodes it to U+FFFD). */
   private def edgeRecords: DataFrame = {
     val texts = Seq("007", "1e2", "-0", "null", "true", " 12 ", "1 2", """{"a":1,"a":2}""",
       "[1,", "", "\"q\"", "107", "k0", "héllo ✓ 日本語", "😀 emoji 👍🏽", "say \"hi\" \\ /",
@@ -228,19 +231,27 @@ class RenderStreamSpec extends AnyFunSuite {
       // Escapes that parse to lone surrogates (a truncated emoji, as
       // JSON.stringify writes it), a pair and a plain escape.
       "\"\\ud83d x\"", "{\"a\":\"\\udc00\"}", "{\"\\ud83d\":[\"\\ud83d\\ude00 \\u00e9\"]}",
+      "12345678901234567890", "  ", "\uFEFFk0",
       "é" * 2100)
     assert(texts.last.getBytes(StandardCharsets.UTF_8).length > 4096)
+    def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
+    val malformed = Array(0x6b, 0xc3, 0x28, 0xed, 0xa0, 0x80, 0xff).map(_.toByte)
     val rows = texts.indices.map { i =>
       org.apache.spark.sql.Row("result", if (i == 4) null else s"tópic-$i", i % 3, i * 7L,
-        1704067200000L + i, texts(i), texts(texts.size - 1 - i))
+        1704067200000L + i, utf8(texts(i)), utf8(texts(texts.size - 1 - i)))
     } ++ Seq(
-      org.apache.spark.sql.Row("offset", "t", 0, 1L, 2L, null, "v"),
-      org.apache.spark.sql.Row("result", "t", 1, 2L, 3L, "k", null),
-      org.apache.spark.sql.Row("result", "t", 2, 3L, 4L, null, null))
+      org.apache.spark.sql.Row("offset", "t", 0, 1L, 2L, null, utf8("v")),
+      org.apache.spark.sql.Row("result", "t", 1, 2L, 3L, utf8("k"), null),
+      org.apache.spark.sql.Row("result", "t", 2, 3L, 4L, null, null),
+      org.apache.spark.sql.Row("result", "t", 0, 4L, 5L, malformed, utf8("{}")),
+      org.apache.spark.sql.Row("result", "t", 1, 5L, 6L, utf8("k"), malformed),
+      org.apache.spark.sql.Row(null, null, null, null, null, null, null))
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "type STRING, topic STRING, partition INT, offset BIGINT, timestamp BIGINT, " +
-        "key STRING, value STRING")
+        "key BINARY, value BINARY")
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      .withColumn("key", col("key").cast("string"))
+      .withColumn("value", col("value").cast("string"))
   }
 
   test("render is byte-identical to the toJSON path for each /search request form") {
@@ -269,8 +280,10 @@ class RenderStreamSpec extends AnyFunSuite {
       body
     }
     val edges = bodies.last
-    assert(mapper.readTree(edges).size() == 25)
-    for (t <- Seq("😀 emoji 👍🏽", "\"key\" : 100.0", "\"value\" : \"007\"",
+    assert(mapper.readTree(edges).size() == 31)
+    for (t <- Seq("😀 emoji 👍🏽", "\"key\" : 100.0", "\"value\" : \"007\"", ", { }",
+        "\"key\" : \"k\uFFFD(\uFFFD", "\"key\" : 12345678901234567890",
+        "\"key\" : \"  \"", "\"key\" : \"\uFEFFk0\"", "\"key\" : 0,",
         "\"key\" : \"[1,\"", "\"key\" : \"\"", "\"key\" : \"q\"", "\\u0001",
         "\"key\" : \"? x\"", "\"a\" : \"?\"", "\"?\" : [ \"😀 é\" ]"))
       assert(edges.contains(t), t)
