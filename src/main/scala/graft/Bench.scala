@@ -30,15 +30,12 @@ object Bench {
     // (adjudicated as a JIT/GC outlier in VERDICT r3). Warm-up errors are
     // ignored; the timed pass still reports per-query errors.
     if (warmDistinct) {
-      Harness.useArchive(spark, warmSf)
+      graft.log.RecordLog.archive(spark, warmSf)
       Harness.time(spark, names, warmSf, 1)
     }
-    // Record-log queries read the ARCHIVED topic layout (LogStore) — the
-    // production lake shape, where partition/offset/timestamp predicates
-    // prune directories and row groups. ~1s/query of offset re-synthesis
-    // (a stand-in-only artifact) disappears from the record family.
-    // Layout equivalence is oracle-checked (q08b).
-    val layout = Harness.useArchive(spark, sfDir)
+    // Record-log queries read the archived topic layout (LogStore); its
+    // build is the out-of-band job a deployment runs, so it is untimed.
+    graft.log.RecordLog.archive(spark, sfDir)
     // Calibration canary (VERDICT r11 item 3): a fixed probe — one
     // in-memory aggregate plus one small parquet scan, both independent
     // of the query surface — timed before and after the timed passes.
@@ -72,7 +69,7 @@ object Bench {
       else (name, runs.map(_.seconds).min,
         runs.last.error.map(_.toString.takeWhile(_ != '\n').take(200)))
     }
-    val (line, full) = artifacts(results, calStart, calEnd, sfDir, layout, cpus)
+    val (line, full) = artifacts(results, calStart, calEnd, sfDir, cpus)
     val printed = publish(line, full, "/root/repo")
     // The one-line JSON is printed LAST, after spark.stop(), so no Spark
     // shutdown logging can land on stdout after it — a reader of the
@@ -87,7 +84,7 @@ object Bench {
     * run used) and `commit` (`git rev-parse HEAD`, or `"unknown"`), so a
     * committed timing names the machine shape and code it came from. */
   private[graft] def artifacts(results: Seq[(String, Double, Option[String])],
-      calStart: Double, calEnd: Double, sfDir: String, layout: String,
+      calStart: Double, calEnd: Double, sfDir: String,
       cpus: String): (String, String) = {
     val commit =
       try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
@@ -115,12 +112,12 @@ object Bench {
     }.take(8).mkString("{", ",", "}")
     val total = results.collect { case (_, v, None) => v }.sum
     val cal = s"""{"start":${r4(calStart)},"end":${r4(calEnd)}}"""
-    val line = s"""{"metric":"total","value":${r4(total)},"unit":"sec","n_queries":${results.size},"n_errors":${results.count(_._3.nonEmpty)},"queries":$qs,"queries_note":"top-20 slowest; all ${results.size} timings in committed BENCHFULL.json","errors":$errs,"calibration":$cal,"sf":"$sfDir","layout":"$layout",$stamps}"""
+    val line = s"""{"metric":"total","value":${r4(total)},"unit":"sec","n_queries":${results.size},"n_errors":${results.count(_._3.nonEmpty)},"queries":$qs,"queries_note":"top-20 slowest; all ${results.size} timings in committed BENCHFULL.json","errors":$errs,"calibration":$cal,"sf":"$sfDir","layout":"archive",$stamps}"""
     // Full-precision artifact, one query per line, committed alongside
     // the round artifacts so every timing is readable without re-running
     // the bench (no tail window to outgrow).
     val full = new StringBuilder
-    full ++= s"""{"sf":"$sfDir","layout":"$layout",$stamps,"calibration":{"start":$calStart,"end":$calEnd},\n"queries":{\n"""
+    full ++= s"""{"sf":"$sfDir","layout":"archive",$stamps,"calibration":{"start":$calStart,"end":$calEnd},\n"queries":{\n"""
     full ++= results.map { case (k, v, e) =>
       val err = e.map(x => s""","err":"${Harness.jsonString(x, x.length)}"""").getOrElse("")
       s"""  "$k":{"s":$v$err}"""

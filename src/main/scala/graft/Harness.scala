@@ -1,39 +1,16 @@
 package graft
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one place a main runs a registered query ([[SparkEntry.queries]]):
   * [[Bench]], [[Verify]], [[Plans]] and the `graft.tools` mains all build,
-  * sink, time and release through [[run]], on the record layout chosen by
-  * [[useArchive]].
+  * sink, time and release through [[run]]. Each builds the record-log
+  * archive first, untimed, with [[graft.log.RecordLog.archive]].
   */
 object Harness {
 
   /** The wall time of one [[run]] (build plus sink) and what it threw. */
   final case class Timed(seconds: Double, error: Option[Throwable])
-
-  /** Point the record-log queries of `spark` at `sfDir`'s archived topic
-    * layout ([[graft.log.LogStore]]), building the archive first when it
-    * is missing or from another fixture generation. The archive build is
-    * the out-of-band job a real deployment runs, so callers run this
-    * untimed. Returns the layout in use: `"archive"`, or `"live"` when
-    * the build fails — a failure here must degrade to the live synthesis,
-    * not end the run before any query is measured. */
-  def useArchive(spark: SparkSession, sfDir: String): String = {
-    val dir = s"/tmp/graft-bench-archive-${Integer.toHexString(sfDir.hashCode)}"
-    val layout =
-      try { graft.log.LogStore.ensureMaterialized(spark, sfDir, dir); "archive" }
-      catch { case NonFatal(e) =>
-        System.err.println(
-          s"[harness] archive materialization failed; using the live record layout: $e")
-        "live"
-      }
-    spark.conf.set("spark.graft.recordSource", layout)
-    spark.conf.set("spark.graft.archiveDir", dir)
-    layout
-  }
 
   /** Build the registered query `name` on `sfDir`, pass it to `sink` and
     * time both. Any throwable is returned, not thrown, so one failing

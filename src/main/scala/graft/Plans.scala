@@ -45,18 +45,16 @@ object Plans {
     // a cwd-relative spark-warehouse (the Bench/Verify convention).
     val spark = GraftSession.local("4", "/tmp/graft-plans-warehouse")
     spark.sparkContext.setLogLevel("ERROR")
-    def dump(name: String, suffix: String = ""): Unit = {
-      println(s"\n===================== $name$suffix =====================")
+    def dump(name: String): Unit = {
+      println(s"\n===================== $name =====================")
       Harness.run(spark, name, sfDir)(df => println(df.queryExecution
         .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
         .error.foreach(throw _)
     }
-    Flagships.foreach(dump(_))
-    // The archived layout the bench runs record queries on: partition
-    // predicates become PartitionFilters (directory pruning) instead of a
-    // post-scan Filter over a computed column.
-    val layout = Harness.useArchive(spark, sfDir)
-    Seq("q01_scan", "q08_partitions").foreach(dump(_, s" [$layout layout]"))
+    // The archived layout every record query reads: partition predicates
+    // become PartitionFilters (directory pruning, q08_partitions).
+    graft.log.RecordLog.archive(spark, sfDir)
+    (Flagships :+ "q08_partitions").foreach(dump)
     spark.stop()
   }
 }

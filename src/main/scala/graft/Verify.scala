@@ -9,9 +9,9 @@ object Verify {
     // Sidecar tables (the q67 stored-index fixture) land here rather
     // than under a cwd-relative spark-warehouse.
     val spark = GraftSession.local(cpus, "/tmp/graft-verify-warehouse")
-    // Opt-in record-log cache: ~15 conformance queries share one scan of
-    // the synthesized log at sf0.01 (general path stays uncached).
-    spark.conf.set("spark.graft.cacheRecordLog", "true")
+    // Every record query reads the archive, so the oracle checks the
+    // archived layout, footer-bound seeks included.
+    graft.log.RecordLog.archive(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     var failed = 0
     // Local-iteration filter (driver sets nothing → full run): a
@@ -23,17 +23,8 @@ object Verify {
         SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    // The relative-offset queries run on the archived record layout, where
-    // the window seeks by the parquet footers' offset bounds: the oracle
-    // checks that path, not only the aggregate window of the live one.
-    // (q08b reads the archive by itself.)
-    lazy val archived = {
-      val s = spark.newSession()
-      Harness.useArchive(s, sfDir)
-      s
-    }
     selected.keys.foreach { name =>
-      Harness.run(if (name.startsWith("q10_")) archived else spark, name, sfDir)(
+      Harness.run(spark, name, sfDir)(
         _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       ).error.foreach { e =>
         failed += 1

@@ -29,8 +29,8 @@ import graft.core.{Murmur2, QueryOptions}
   *    the row-group statistics in the parquet footers, read once per file
   *    state, and the window is literal per-partition predicates on the
   *    scan — one pass, no aggregate, no shuffle, no broadcast. Only a
-  *    frame with no archive files (the live synthesis, an in-memory
-  *    frame) probes by a per-partition aggregate broadcast back;
+  *    frame whose bounds the footers cannot give (an in-memory frame)
+  *    probes by a per-partition aggregate broadcast back;
   *  - no collect, no driver loop: the plan is a single DAG.
   */
 object LogQuery {
@@ -125,8 +125,8 @@ object LogQuery {
     // n < 0 → latest + n, where latest is the end position (max offset + 1),
     // matching KafkaConsumer.seekToEnd + position semantics.
     // This is the general definition, for frames whose bounds only a scan
-    // can give (the live synthesis, in-memory frames); [[consumed]] seeks
-    // archived topics by their footer bounds instead.
+    // can give (in-memory frames); [[consumed]] seeks archived topics by
+    // their footer bounds instead.
     // Bounds are probed from the PRUNED slice, like the reference probing
     // only assigned partitions (`kafka.clj:99-109`) — probing the unpruned
     // union would scan every partition of every topic (VERDICT r2 item 4).
@@ -198,17 +198,4 @@ object LogQuery {
     */
   def canonical(df: DataFrame): DataFrame =
     df.orderBy("type", "topic", "partition", "offset")
-
-  /** P6's Spark-native sibling (SURVEY §2.2): zero-cost scan metrics via
-    * `observe` — rows consumed and the high-water offset, collected
-    * map-side during the SAME pass, no second scan and no extra rows in
-    * the output (complements the heartbeat rows, which reproduce the
-    * reference's visible format). Read the metrics off the returned
-    * Observation after an action completes.
-    */
-  def observed(df: DataFrame, name: String): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation(name)
-    (df.observe(obs, count(lit(1)).as("rows_consumed"),
-      max(col("offset")).as("max_offset")), obs)
-  }
 }

@@ -1,5 +1,10 @@
 package graft.log
 
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -8,30 +13,41 @@ import graft.core.Tables
 
 /** Topic archive (tiered storage): a record-log topic materialized ONCE as
   * partition-directory parquet — the lake layout of a compacted/archived
-  * Kafka topic.
+  * Kafka topic, and the one layout [[RecordLog]] reads.
   *
-  * Why it matters at 100 TB: in the live stand-in, `partition` is a
-  * COMPUTED column, so `--partitions 3,5` filters after the scan. In the
-  * archive, `partition` is the directory key: the same predicate becomes
-  * directory-level partition pruning (`PartitionFilters` on the scan — a
-  * scan of 2/10ths of the data), and offset/timestamp predicates hit
-  * parquet row-group min/max. Archive once, then every exploratory query
-  * pays only for what it touches.
+  * Why it matters at 100 TB: `partition` is the directory key, so a
+  * `--partitions 3,5` predicate becomes directory-level partition pruning
+  * (`PartitionFilters` on the scan — a scan of 2/10ths of the data), and
+  * offset/timestamp predicates hit parquet row-group min/max. Archive
+  * once, then every exploratory query pays only for what it touches.
+  *
+  * An archive is either pinned (built out of band, e.g. by
+  * [[materialize]], and named by the session conf: [[RecordLog.archive]])
+  * or derived: `sfDir`'s archive at [[derivedDir]], kept current by
+  * [[ensureMaterialized]].
   */
 object LogStore {
 
   /** Archive `sfDir`'s topics under `storeDir/<topic>/partition=<p>/...`.
-    * Reads the live synthesis, not [[RecordLog.topic]]: with the archive
-    * layout on, that would copy the current `spark.graft.archiveDir`
-    * instead of `sfDir`. */
+    * Reads the synthesis ([[RecordLog.build]]), not [[RecordLog.topic]],
+    * which would copy the pinned archive instead of `sfDir`. */
   def materialize(spark: SparkSession, sfDir: String, storeDir: String,
-      topics: Seq[String] = Seq("events", "clicks")): Unit =
+      topics: Seq[String] = RecordLog.Topics): Unit =
     topics.foreach { t =>
       RecordLog.build(spark, sfDir, t)
         .write.mode(SaveMode.Overwrite)
         .partitionBy("partition")
         .parquet(s"$storeDir/$t")
     }
+
+  /** Where `sfDir`'s derived archive lives: one directory per fixture
+    * location under the JVM's temporary directory. */
+  def derivedDir(sfDir: String): String = {
+    val where = new java.io.File(sfDir).getCanonicalPath
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(where.getBytes(UTF_8)).take(8).map(b => f"${b & 0xff}%02x").mkString
+    Paths.get(System.getProperty("java.io.tmpdir"), s"graft-archive-$digest").toString
+  }
 
   /** Identity of the archive's upstream: every archived topic derives
     * from the fixture's events.parquet, so its (size, mtime) names the
@@ -45,23 +61,36 @@ object LogStore {
     * existing archive only when every requested topic's `_SUCCESS` exists
     * AND the marker matches the CURRENT fixture's events.parquet
     * (size + mtime). A bare `_SUCCESS` check silently served archives
-    * built from a superseded fixture generation after the driver
-    * regenerated the testdata (round-13 hazard): timings and layout
-    * checks would run against stale rows with nothing flagging it. */
+    * built from a superseded fixture generation after the testdata was
+    * regenerated: timings and layout checks would run against stale rows
+    * with nothing flagging it.
+    *
+    * Builds of one directory are serialized: within the JVM by a lock per
+    * directory, across processes by a file lock in it. A caller that
+    * waited re-checks the marker, so the first build is the only one. */
   def ensureMaterialized(spark: SparkSession, sfDir: String, storeDir: String,
-      topics: Seq[String] = Seq("events", "clicks")): Unit = {
-    val marker = java.nio.file.Paths.get(storeDir, ".source-fingerprint")
+      topics: Seq[String] = RecordLog.Topics): Unit = {
+    val marker = Paths.get(storeDir, ".source-fingerprint")
     val fp = sourceFingerprint(sfDir)
-    val fresh = topics.forall(t =>
-        new java.io.File(s"$storeDir/$t/_SUCCESS").exists()) &&
-      java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp
-    if (!fresh) {
-      materialize(spark, sfDir, storeDir, topics)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
+    def fresh = topics.forall(t => new java.io.File(s"$storeDir/$t/_SUCCESS").exists()) &&
+      Files.exists(marker) && new String(Files.readAllBytes(marker), UTF_8) == fp
+    if (!fresh) building.computeIfAbsent(storeDir, _ => new Object).synchronized {
+      Files.createDirectories(marker.getParent)
+      val lock = FileChannel.open(Paths.get(storeDir, ".lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try {
+        lock.lock()
+        if (!fresh) {
+          materialize(spark, sfDir, storeDir, topics)
+          Files.write(marker, fp.getBytes(UTF_8))
+        }
+      } finally lock.close()
     }
   }
+
+  /** One lock object per archive directory [[ensureMaterialized]] has
+    * been asked to build. */
+  private val building = new ConcurrentHashMap[String, Object]()
 
   /** Read an archived topic back in the canonical record-column order.
     * Partition predicates prune directories; offset/timestamp predicates

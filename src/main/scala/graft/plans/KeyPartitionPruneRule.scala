@@ -1,10 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, Literal, RLike}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, EqualTo, Expression, Literal,
+  NamedExpression, RLike}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, Metadata, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Murmur2
@@ -69,18 +70,33 @@ object KeyPartitionPruneRule extends Rule[LogicalPlan] {
       case _ => false
     }
 
+  /** `cond` over `child` with the partition conjunct added, when `part`
+    * (a partition attribute of `child` and the metadata declaring it) is
+    * known and not yet constrained, and `cond` pins a literal key. */
+  private def pruned(cond: Expression, child: LogicalPlan,
+      part: Option[(Attribute, Metadata)]): Option[Expression] = for {
+    (attr, meta) <- part
+    if !constrainsPartition(cond, attr)
+    key <- child.output.find(_.name == meta.getString(PartitionOfKey))
+    lit <- literalKeyOf(cond, key)
+  } yield And(cond, EqualTo(attr, Literal(
+    Murmur2.partition(lit, meta.getLong(NumPartitionsKey).toInt))))
+
+  private def isPartition(a: NamedExpression): Boolean =
+    a.dataType == IntegerType && a.metadata.contains(PartitionOfKey)
+
+  /** The declaring metadata sits on the partition attribute itself (a
+    * synthesized log) or on the projection that names a scan's partition
+    * column (the archive), beneath which the key filter has been pushed. */
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case p @ Project(list, Filter(cond, child)) =>
+      val part = list.collectFirst {
+        case a @ Alias(src: Attribute, _) if isPartition(a) => src -> a.metadata
+      }
+      pruned(cond, child, part).map(c => p.copy(child = Filter(c, child))).getOrElse(p)
     case f @ Filter(cond, child) =>
-      val rewritten = for {
-        part <- child.output.find(a =>
-          a.dataType == IntegerType && a.metadata.contains(PartitionOfKey))
-        if !constrainsPartition(cond, part)
-        keyName = part.metadata.getString(PartitionOfKey)
-        key <- child.output.find(_.name == keyName)
-        lit <- literalKeyOf(cond, key)
-        n = part.metadata.getLong(NumPartitionsKey).toInt
-      } yield Filter(And(cond, EqualTo(part, Literal(Murmur2.partition(lit, n)))), child)
-      rewritten.getOrElse(f)
+      pruned(cond, child, child.output.find(isPartition).map(a => a -> a.metadata))
+        .map(Filter(_, child)).getOrElse(f)
   }
 }
 

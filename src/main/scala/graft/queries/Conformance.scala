@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.{Murmur2, QueryOptions, Tables}
-import graft.log.{LogQuery, LogStore, RecordLog}
+import graft.log.{LogQuery, RecordLog}
 import graft.ops.{AsofJoin, IntervalJoin}
 import graft.oracle.Duck
 
@@ -77,15 +77,13 @@ object Conformance {
     // Q8 A1 explicit partition pruning.
     "q08_partitions" -> ((s, sf) => rec(s, sf, base().copy(partitions = Some(Seq(3, 5))))),
 
-    // Q8b: the same pruned scan answered from the ARCHIVED topic layout
-    // (LogStore) — directory-level partition pruning instead of a
-    // post-scan filter; results must be layout-independent.
+    // Q8b: the same pruned scan over the topic's frame
+    // (`consumedFrom`, the binding point for any record frame) —
+    // directory-level partition pruning on the archive.
     "q08b_archive_partitions" -> ((s, sf) => {
-      val store = s"/tmp/graft-archive-${Integer.toHexString(sf.hashCode)}"
-      LogStore.ensureMaterialized(s, sf, store, Seq("events"))
       val o = base().copy(partitions = Some(Seq(3, 5)))
       LogQuery.canonical(LogQuery.resultsFrom(
-        LogQuery.consumedFrom(LogStore.topic(s, store, "events"), o), o))
+        LogQuery.consumedFrom(RecordLog.events(s, sf), o), o))
     }),
 
     // Q9 A2 murmur2 default-partition pruning (key-regex as literal key).

@@ -4,7 +4,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
   OutputStream, StringWriter}
 import java.nio.charset.StandardCharsets
 
-import com.fasterxml.jackson.core.{JsonGenerator, StreamReadConstraints}
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonGenerator, StreamReadConstraints,
+  StreamWriteConstraints}
 import com.fasterxml.jackson.core.io.SerializedString
 import com.fasterxml.jackson.core.json.JsonWriteFeature
 import com.fasterxml.jackson.core.util.DefaultIndenter
@@ -62,7 +63,15 @@ object JsonArrayRender {
     * which would split records. */
   val ChunkBytes = 4096
 
-  private val mapper = new ObjectMapper()
+  /** Reads nest at most one level less than the writers may write: a
+    * key/value text is written one level deep inside its record, so one
+    * nested as deep as the write limit fails its parse and is written as
+    * a plain string, like any text Jackson cannot read. */
+  private val mapper = {
+    val writeDepth = StreamWriteConstraints.defaults().getMaxNestingDepth
+    new ObjectMapper(new JsonFactoryBuilder().streamReadConstraints(
+      StreamReadConstraints.builder().maxNestingDepth(writeDepth - 1).build()).build())
+  }
   // Immutable and thread-safe: one for every record of every request.
   private val prettyWriter = mapper.writerWithDefaultPrettyPrinter()
   /** The same printer over UTF-8 bytes. Combining surrogate pairs writes a

@@ -23,8 +23,9 @@ import graft.render.JsonArrayRender
   * logged, the 200 header is already on the wire — same trade-off as the
   * reference.
   *
-  * Sandbox binding: `bootstrap-servers` carries the fixture directory (the
-  * "cluster address" of the parquet-backed log).
+  * Sandbox binding: `bootstrap-servers` (and `/pipeline`'s `dir`) names
+  * the fixture directory (the "cluster address" of the parquet-backed
+  * log) through the configured cluster map ([[cluster]]).
   */
 final class HttpService(spark: SparkSession, port: Int,
     config: graft.core.Config = graft.core.Config.load()) {
@@ -59,17 +60,35 @@ final class HttpService(spark: SparkSession, port: Int,
   private def queryArgs(ex: HttpExchange): Map[String, String] =
     QueryOptions.queryArgs(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
 
+  /** A cluster argument resolved through the configured cluster map, the
+    * same named-cluster convention the reference's console surface uses
+    * (`core.clj:131-143`): a cluster NAME resolves to its configured
+    * location; a raw path is accepted only when it is itself a configured
+    * value. An unauthenticated server must not grant reads of arbitrary
+    * Spark-readable directories, nor build archives of them (VERDICT r11
+    * item 4). */
+  private def cluster(arg: String): Option[String] =
+    config.kafkaBootstrapServers.get(arg).orElse(
+      Option.when(config.kafkaBootstrapServers.valuesIterator.contains(arg))(arg))
+
   private def searchHandler(ex: HttpExchange): Unit = {
     val args = try queryArgs(ex) catch { case e: Exception =>
       return reply(ex, 400, errorJson(e.getMessage))
     }
-    val opts = try QueryOptions.fromMap(args) catch { case e: IllegalArgumentException =>
+    val parsed = try QueryOptions.fromMap(args) catch { case e: IllegalArgumentException =>
       return reply(ex, 400, errorJson(e.getMessage))
+    }
+    val opts = cluster(parsed.bootstrapServers) match {
+      case Some(dir) => parsed.copy(bootstrapServers = dir)
+      case None => return reply(ex, 400, errorJson(s"unknown bootstrap-servers: " +
+        s"${parsed.bootstrapServers} (not a configured cluster name or location)"))
     }
     if (opts.follow) return followHandler(ex, opts)
     // Build + analyze the plan BEFORE committing the response: build-time
-    // argument errors (e.g. an unknown topic) still reach the 400 channel;
-    // only runtime failures are left to the mid-stream trade-off.
+    // argument errors (e.g. an unknown topic) still reach the 400 channel,
+    // and a failed build of the topics' archive (the first read of a
+    // cluster builds it) is a 500 from `route`; only runtime failures are
+    // left to the mid-stream trade-off.
     val df = try {
       val d = LogQuery.stream(spark, opts.bootstrapServers, opts)
         .sortWithinPartitions("type", "topic", "partition", "offset")
@@ -238,16 +257,8 @@ final class HttpService(spark: SparkSession, port: Int,
       case Some(q) => q
       case None => return reply(ex, 400, errorJson(s"unknown query: $name"))
     }
-    // `dir` resolves through the configured cluster map, the same
-    // named-cluster convention the reference's console surface uses
-    // (`core.clj:131-143`): a cluster NAME resolves to its configured
-    // location; a raw path is accepted only when it is itself a
-    // configured value. An unauthenticated server must not grant reads
-    // of arbitrary Spark-readable directories (VERDICT r11 item 4).
-    val dir = config.kafkaBootstrapServers.getOrElse(dirArg,
-      if (config.kafkaBootstrapServers.valuesIterator.contains(dirArg)) dirArg
-      else return reply(ex, 400,
-        errorJson(s"unknown dir: $dirArg (not a configured cluster name or location)")))
+    val dir = cluster(dirArg).getOrElse(return reply(ex, 400,
+      errorJson(s"unknown dir: $dirArg (not a configured cluster name or location)")))
     var toClose: Option[OutputStream] = None
     // The collecting body must RETURN NORMALLY on every path — an
     // exception escaping it would lose the frame list before release

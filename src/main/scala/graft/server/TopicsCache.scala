@@ -20,7 +20,7 @@ final class TopicsCache(clusters: Seq[String], refreshSeconds: Int = 300) {
     state.set(clusters.map(c => c -> listTopics(c)).toMap)
 
   private def listTopics(cluster: String): Set[String] =
-    Set("events", "clicks") ++ graft.core.Tables.All
+    graft.log.RecordLog.Topics.toSet ++ graft.core.Tables.All
 
   /** Daemon refresher thread, like the reference's future-per-cluster. */
   private val refresher = new Thread(() => {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.{QueryOptions, Tables}
-import graft.log.LogQuery
+import graft.log.{LogQuery, RecordLog}
 
 /** Follow mode (L2) — the reference's `--follow` tail
   * (`/root/reference/src/kbrowse/cli.clj:52`, `search.clj:103-122` ignores
@@ -18,10 +18,13 @@ import graft.log.LogQuery
   *    the bounded-replay mode the tests assert batch/stream agreement on;
   *  - `Trigger.ProcessingTime` = true tailing for a growing directory.
   *
-  * Offsets: the batch stand-in synthesizes per-partition offsets with a
-  * global window — impossible incrementally (an unbounded shuffle-sort).
-  * A real log source delivers offsets; the file stand-in uses `event_id`
-  * as the monotone offset surrogate, documented here.
+  * Topics: each asked-for topic is its rows of the events stream, by the
+  * same definition the archive is built from ([[RecordLog.rowsOf]]).
+  *
+  * Offsets: the archive's per-partition offsets come from a global
+  * window — impossible incrementally (an unbounded shuffle-sort). A real
+  * log source delivers offsets; the file stand-in uses `event_id` as the
+  * monotone offset surrogate, documented here.
   */
 object StreamingLog {
 
@@ -40,14 +43,14 @@ object StreamingLog {
         "--relative-offset needs a seekable source; not supported in follow mode here")
     graft.functions.GraftFunctions.register(spark)
     val raw = eventsStream(spark, sfDir)
-    val recs = raw.select(
-      lit("events").as("topic"),
+    val recs = opts.topics.map(t => RecordLog.rowsOf(raw, t).select(
+      lit(t).as("topic"),
       graft.functions.GraftFunctions.kafkaPartition(col("user_id").cast("string"),
-        graft.log.RecordLog.NumPartitions).as("partition"),
+        RecordLog.NumPartitions).as("partition"),
       col("event_id").as("offset"), // monotone surrogate (see scaladoc)
       unix_millis(col("ts")).as("timestamp"),
       col("user_id").cast("string").as("key"),
-      col("props").as("value"))
+      col("props").as("value"))).reduce(_ union _)
     LogQuery.streamFrom(LogQuery.consumedFrom(recs, opts), opts)
   }
 

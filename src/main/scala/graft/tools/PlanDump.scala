@@ -15,7 +15,7 @@ object PlanDump {
     val outDir = if (args.length > 3) args(3) else "/root/repo/plans/r21"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.GraftSession.local(cpus, "/tmp/graft-plandump-warehouse")
-    graft.Harness.useArchive(spark, sfDir)
+    graft.log.RecordLog.archive(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       graft.Harness.run(spark, name, sfDir) { df =>

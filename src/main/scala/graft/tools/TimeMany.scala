@@ -34,7 +34,7 @@ object TimeMany {
     val passes = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.GraftSession.local(cpus, "/tmp/graft-timemany-warehouse")
-    Harness.useArchive(spark, sfDir)
+    graft.log.RecordLog.archive(spark, sfDir)
     def show(n: String, label: String, r: Harness.Timed): Unit =
       println(f"[timemany] $n $label: ${r.seconds}%.3f s" +
         r.error.fold("")(e => s" ERROR: ${e.toString.take(200)}"))

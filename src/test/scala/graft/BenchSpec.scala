@@ -17,7 +17,7 @@ class BenchSpec extends AnyFunSuite {
     val err = head + "x" * (79 - head.length) + "😀" + "tail"
     assert(Character.isHighSurrogate(err.charAt(79)))
     val results = Seq(("q01_scan", 0.5, None), ("q02_multi_topic", 0.7, Some(err)))
-    val (line, full) = Bench.artifacts(results, 0.25, 0.3, "/sf", "archive", "4")
+    val (line, full) = Bench.artifacts(results, 0.25, 0.3, "/sf", "4")
     val dir = Files.createTempDirectory("graft-bench-spec")
     val printed = Bench.publish(line, full, dir.toString)
 

@@ -10,7 +10,8 @@ import graft.ops.Materialize
 
 /** The query harness releases every frame a run registers, whether the
   * sink returns or throws, and stays the only place in `src/main` that
-  * releases a query's frames or picks the record layout. */
+  * releases a query's frames. The record log has one layout: no record-log
+  * switch is left, and only `RecordLog` reads where the archive is. */
 class HarnessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -38,15 +39,22 @@ class HarnessSpec extends AnyFunSuite {
     assert(Materialize.liveSnapshot(spark) == baseline)
   }
 
-  test("src/main releases frames and sets the record source only in Harness") {
+  private def holders(needle: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val files = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    def holders(needle: String): Seq[String] = files
       .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains(needle))
       .map(_.getFileName.toString).sorted
+  }
+
+  test("src/main releases frames only in Harness") {
     assert(holders("Materialize.releaseAll(") == Seq("Harness.scala"))
-    assert(holders("spark.conf.set(\"spark.graft.recordSource\"") == Seq("Harness.scala"))
+  }
+
+  test("src/main names no record-log switch; only RecordLog reads the archive location") {
+    Seq("spark.graft.recordSource", "spark.graft.cacheRecordLog", "spark.graft.offsets")
+      .foreach(switch => assert(holders(switch).isEmpty, switch))
+    assert(holders("spark.graft.archiveDir") == Seq("RecordLog.scala"))
   }
 }

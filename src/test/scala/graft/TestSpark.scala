@@ -24,10 +24,9 @@ object TestSpark {
   val Sf = "/root/testdata/sf0.001"
 
   /** A new session (its own conf and resolved relations) whose record
-    * log is the archive under `dir` (`spark.graft.recordSource=archive`). */
+    * log is the archive pinned at `dir` (`spark.graft.archiveDir`). */
   def onArchive(dir: String): SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.graft.recordSource", "archive")
     s.conf.set("spark.graft.archiveDir", dir)
     s
   }

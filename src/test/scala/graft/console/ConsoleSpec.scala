@@ -14,7 +14,8 @@ import graft.server.HttpService
   * reference's field names (`main.js:403-423, 428-506`). */
 class ConsoleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private lazy val svc = new HttpService(spark, port = 0).start()
+  private lazy val svc = new HttpService(spark, port = 0, graft.core.Config.Defaults.copy(
+    kafkaBootstrapServers = Map("sandbox" -> TestSpark.Sf))).start()
   private val mapper = new ObjectMapper()
 
   // ---------------------------------------------------------------- C6

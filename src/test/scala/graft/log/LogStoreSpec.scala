@@ -16,9 +16,14 @@ class LogStoreSpec extends AnyFunSuite {
   private val opts = QueryOptions(bootstrapServers = "x", topics = Seq("events"),
     partitions = Some(Seq(3, 5)))
 
-  test("archived topic answers identically to the live synthesis") {
-    val live = LogQuery.canonical(LogQuery.results(spark, TestSpark.Sf, opts))
+  /** The pruned results over the synthesis the archive is written from. */
+  private def synthesized(): Seq[String] =
+    LogQuery.canonical(LogQuery.resultsFrom(
+        LogQuery.consumedFrom(RecordLog.build(spark, TestSpark.Sf, "events"), opts), opts))
       .collect().map(_.mkString("|")).toSeq
+
+  test("archived topic answers identically to the live synthesis") {
+    val live = synthesized()
     val archived = LogQuery.canonical(LogQuery.resultsFrom(
         LogQuery.consumedFrom(LogStore.topic(spark, store, "events"), opts), opts))
       .collect().map(_.mkString("|")).toSeq
@@ -26,23 +31,59 @@ class LogStoreSpec extends AnyFunSuite {
     assert(live.nonEmpty)
   }
 
-  test("spark.graft.recordSource=archive redirects RecordLog.topic to the store") {
-    val live = LogQuery.canonical(LogQuery.results(spark, TestSpark.Sf, opts))
+  /** A fixture of its own: the first `n` events of the test fixture. */
+  private def fixture(name: String, n: Int): String = {
+    val sf = java.nio.file.Files.createTempDirectory(name).toString
+    Tables.load(spark, TestSpark.Sf, "events").orderBy("event_id").limit(n)
+      .write.parquet(s"$sf/events.parquet")
+    sf
+  }
+
+  private def deleteTree(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(root))
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+  }
+
+  test("spark.graft.archiveDir pins RecordLog.topic to the store") {
+    val pinned = TestSpark.onArchive(store)
+    val viaConf = LogQuery.canonical(LogQuery.results(pinned, TestSpark.Sf, opts))
       .collect().map(_.mkString("|")).toSeq
-    spark.conf.set("spark.graft.recordSource", "archive")
-    spark.conf.set("spark.graft.archiveDir", store)
+    assert(viaConf == synthesized())
+    // And it really is the archive scan: directory-level pruning applies.
+    val plan = LogQuery.results(pinned, TestSpark.Sf, opts)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains(s"$store/events") && plan.contains("PartitionFilters"), plan)
+    // Whatever the fixture: the pinned archive answers.
+    val small = fixture("graft-pinned-sf", 100)
+    assert(RecordLog.events(pinned, small).count() ===
+      LogStore.topic(spark, store, "events").count())
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(LogStore.derivedDir(small))),
+      "a pinned session derives no archive")
+  }
+
+  test("unpinned: the first reads build the derived archive once, concurrently") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val sf = fixture("graft-derived-sf", 100)
+    val dir = LogStore.derivedDir(sf)
     try {
-      val viaConf = LogQuery.canonical(LogQuery.results(spark, TestSpark.Sf, opts))
-        .collect().map(_.mkString("|")).toSeq
-      assert(viaConf == live)
-      // And it really is the archive scan: directory-level pruning applies.
-      val plan = LogQuery.results(spark, TestSpark.Sf, opts)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters"), plan)
-    } finally {
-      spark.conf.unset("spark.graft.recordSource")
-      spark.conf.unset("spark.graft.archiveDir")
-    }
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+      val counts = Await.result(Future.sequence((1 to 4).map { i =>
+        Future(RecordLog.topic(spark, sf, RecordLog.Topics(i % 2)).count())
+      }), 300.seconds)
+      val events = Tables.load(spark, sf, "events")
+      assert(counts.toSet == Set(events.count(), RecordLog.rowsOf(events, "clicks").count()))
+      val success = new java.io.File(s"$dir/events/_SUCCESS")
+      val built = success.lastModified()
+      assert(built > 0, s"no archive at $dir")
+      assert(RecordLog.archive(spark, sf) == dir)
+      assert(success.lastModified() == built, "a current archive is not rebuilt")
+      val e = intercept[IllegalArgumentException](RecordLog.topic(spark, sf, "nope"))
+      assert(e.getMessage.contains("unknown topic: nope"))
+    } finally deleteTree(dir)
   }
 
   test("ensureMaterialized rebuilds when the fixture generation changes") {
@@ -76,19 +117,11 @@ class LogStoreSpec extends AnyFunSuite {
   test("materialize archives sfDir even when the archive layout is on") {
     val a = java.nio.file.Files.createTempDirectory("graft-layout-a").toString
     LogStore.materialize(spark, TestSpark.Sf, a, Seq("events"))
-    val sf2 = java.nio.file.Files.createTempDirectory("graft-layout-sf").toString
-    Tables.load(spark, TestSpark.Sf, "events").orderBy("event_id").limit(100)
-      .write.parquet(s"$sf2/events.parquet")
+    val sf2 = fixture("graft-layout-sf", 100)
     val b = java.nio.file.Files.createTempDirectory("graft-layout-b").toString
-    spark.conf.set("spark.graft.recordSource", "archive")
-    spark.conf.set("spark.graft.archiveDir", a)
-    try {
-      LogStore.materialize(spark, sf2, b, Seq("events"))
-      assert(LogStore.topic(spark, b, "events").count() === 100)
-    } finally {
-      spark.conf.unset("spark.graft.recordSource")
-      spark.conf.unset("spark.graft.archiveDir")
-    }
+    val pinned = TestSpark.onArchive(a)
+    LogStore.materialize(pinned, sf2, b, Seq("events"))
+    assert(LogStore.topic(pinned, b, "events").count() === 100)
   }
 
   test("an archive rewritten in place: the next topic read sees the new rows") {

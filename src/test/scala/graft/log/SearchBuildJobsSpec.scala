@@ -12,8 +12,8 @@ import graft.render.JsonArrayRender
   * analyzes it before the response commits, outside any deadline group.
   * Once a session has resolved a topic's parquet relation
   * (`Tables.parquet`), a build lists no files and runs no
-  * schema-inference job — on the archived layout and on the live one, for
-  * one topic and for two. A warm archived tail (`relative-offset`) request
+  * schema-inference job — on a pinned archive and on the fixture's derived
+  * one, for one topic and for two. A warm archived tail (`relative-offset`) request
   * finds its seek positions in the kept parquet footers: it too builds
   * with 0 jobs, and it executes as nothing but the per-partition render
   * jobs — no bounds aggregate, shuffle or broadcast. A `print-offset`
@@ -41,14 +41,15 @@ class SearchBuildJobsSpec extends AnyFunSuite {
     searchFrame(s, opts(topics, tail)).schema
 
   /** A fresh session (its own conf and its own resolved relations) on the
-    * archived layout, or on the live one when `archive` is false. */
-  private def session(archive: Boolean): SparkSession =
-    if (archive) TestSpark.onArchive(store) else spark.newSession()
+    * pinned archive, or on the fixture's derived one when `pinned` is
+    * false. */
+  private def session(pinned: Boolean): SparkSession =
+    if (pinned) TestSpark.onArchive(store) else spark.newSession()
 
-  for ((layout, archive) <- Seq("archived" -> true, "live" -> false);
+  for ((layout, pinned) <- Seq("archived layout" -> true, "derived archive" -> false);
        topics <- Seq(Seq("events"), Seq("events", "clicks"))) {
-    test(s"$layout layout, ${topics.mkString("+")}: a warm session builds the plan with 0 jobs") {
-      val s = session(archive)
+    test(s"$layout, ${topics.mkString("+")}: a warm session builds the plan with 0 jobs") {
+      val s = session(pinned)
       // The cold build resolves the relations, running the inference job:
       // the probe is not blind.
       assert(TestSpark.jobsDuring(s)(build(s, topics)) >= 1)
@@ -59,7 +60,7 @@ class SearchBuildJobsSpec extends AnyFunSuite {
   for (topics <- Seq(Seq("events"), Seq("events", "clicks")))
     test(s"archived layout, ${topics.mkString("+")}: a warm tail request builds with 0 jobs " +
         "and renders with one single-task job per output partition") {
-      val s = session(archive = true)
+      val s = session(pinned = true)
       assert(TestSpark.jobsDuring(s)(build(s, topics, tail = true)) >= 1)
       // Warm: the footer bounds are read and kept with the relation.
       assert(TestSpark.jobsDuring(s)(build(s, topics, tail = true)) == 0)
@@ -78,7 +79,7 @@ class SearchBuildJobsSpec extends AnyFunSuite {
     }
 
   test("a print-offset request scans once: progress and result rows from one projection") {
-    val s = session(archive = true)
+    val s = session(pinned = true)
     val o = QueryOptions.parseQueryString(s"bootstrap-servers=${TestSpark.Sf}" +
       "&topics=events&partitions=2,5&print-offset=50&key-regex=1[0-9]")
     val df = searchFrame(s, o)

@@ -36,7 +36,8 @@ class SeekWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
   private final class Shape(val dir: String) {
     val session: SparkSession = TestSpark.onArchive(dir)
     lazy val service: HttpService = {
-      val svc = new HttpService(session, port = 0, graft.core.Config.Defaults).start()
+      val svc = new HttpService(session, port = 0, graft.core.Config.Defaults.copy(
+        kafkaBootstrapServers = Map("sandbox" -> TestSpark.Sf))).start()
       services += svc
       svc
     }

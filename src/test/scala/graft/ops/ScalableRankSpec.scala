@@ -1,29 +1,21 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.log.RecordLog
 
-/** The scalable two-pass rank must agree exactly with the window
-  * `row_number` derivation it replaces (VERDICT r2 item 3). */
+/** The scalable two-pass running sum over a constant 1 is a 0-based rank:
+  * it must agree exactly with the window `row_number` derivation it
+  * replaces (VERDICT r2 item 3). */
 class ScalableRankSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("scalable offset synthesis ≡ window row_number on the events log") {
-    def snapshot(): Seq[String] =
-      RecordLog.events(spark, TestSpark.Sf)
-        .orderBy("partition", "offset")
-        .collect().map(_.mkString("|")).toSeq
-
-    spark.conf.unset("spark.graft.offsets")
-    val windowed = snapshot()
-    spark.conf.set("spark.graft.offsets", "scalable")
-    val scalable = try snapshot() finally spark.conf.unset("spark.graft.offsets")
-
-    assert(scalable == windowed)
-    assert(windowed.nonEmpty)
-  }
+  /** `df` with its 0-based rank in `r`: the running sum of a constant 1. */
+  private def ranked(df: DataFrame, group: String, order: String, parts: Int): DataFrame =
+    ScalableRank.addGroupedCumSum(df.withColumn("one", lit(1L)), group, Seq(order),
+      "one", "r", parts).drop("one")
 
   test("many-group equivalence: lineitem line ranks ≡ window row_number") {
     import org.apache.spark.sql.expressions.Window
@@ -33,7 +25,7 @@ class ScalableRankSpec extends AnyFunSuite {
     val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
     val windowed = li.withColumn("r", row_number().over(w).cast("long") - 1)
       .collect().map(_.mkString("|")).toSet
-    val scalable = ScalableRank.addRank(li, "l_orderkey", Seq("l_linenumber"), "r", 8)
+    val scalable = ranked(li, "l_orderkey", "l_linenumber", 8)
       .collect().map(_.mkString("|")).toSet
     assert(scalable == windowed) // ~1500 groups through range partitions
     assert(windowed.nonEmpty)
@@ -47,7 +39,7 @@ class ScalableRankSpec extends AnyFunSuite {
     val w = Window.partitionBy("g").orderBy("x")
     val windowed = df.withColumn("r", row_number().over(w).cast("long") - 1)
       .collect().map(_.mkString("|")).toSet
-    val scalable = ScalableRank.addRank(df, "g", Seq("x"), "r", 16)
+    val scalable = ranked(df, "g", "x", 16)
       .collect().map(_.mkString("|")).toSet
     assert(scalable == windowed)
     assert(windowed.size == 300000)
@@ -57,9 +49,9 @@ class ScalableRankSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq(("g1", 5), ("g1", 3), ("g2", 9), ("g1", 7), ("g2", 1))
       .toDF("g", "x")
-    val ranked = ScalableRank.addRank(df, "g", Seq("x"), "r", numPartitions = 3)
+    val rows = ranked(df, "g", "x", 3)
       .collect().map(r => (r.getAs[String]("g"), r.getAs[Int]("x"), r.getAs[Long]("r")))
-    assert(ranked.filter(_._1 == "g1").sortBy(_._2).map(_._3).toSeq == Seq(0L, 1L, 2L))
-    assert(ranked.filter(_._1 == "g2").sortBy(_._2).map(_._3).toSeq == Seq(0L, 1L))
+    assert(rows.filter(_._1 == "g1").sortBy(_._2).map(_._3).toSeq == Seq(0L, 1L, 2L))
+    assert(rows.filter(_._1 == "g2").sortBy(_._2).map(_._3).toSeq == Seq(0L, 1L))
   }
 }

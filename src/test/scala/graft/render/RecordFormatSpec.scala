@@ -55,6 +55,9 @@ class RecordFormatSpec extends AnyFunSuite {
         .map(_.distinctBy(_._1.trim).map { case (k, v) => k + ":" + v }.mkString("{", ",", "}")))
   }
 
+  /** An array text nested `depth` levels deep. */
+  private def nested(depth: Int): String = "[" * depth + "]" * depth
+
   /** Texts that are not JSON: the fields path writes them as strings. */
   private val plainTexts = Seq("user-7", "k0", "+1", "NaN", "Infinity", ".5",
     "'a'", "/* c */ 1", "# x", "x", "abc def", "héllo ✓ 日本語", "=", "]", "}", "", " ",
@@ -76,7 +79,8 @@ class RecordFormatSpec extends AnyFunSuite {
     "{\"\\ud83d\":[\"\\ud83d\\ude00 \\u00e9\"]}", "[\"a\\nb\"]", "\"\\\\\"",
     "\"a\u0001b\"", "\"\u007f\"", "[\"tab\tin\"]", "\u2028", "\"\u2028\"", "[\"é\"]",
     "\"😀\"", "😀 emoji", "\uFEFF{}", "\uFEFF12", "\uFEFFk", "\u00a0 1", "𝟙",
-    "[" * 33 + "]" * 33, "{\"a\":" * 33 + "1" + "}" * 33, "[" * 1001 + "]" * 1001,
+    "[" * 33 + "]" * 33, "{\"a\":" * 33 + "1" + "}" * 33, nested(999), nested(1000),
+    nested(1001),
     (0 until 70).map(i => s""""k$i":$i""").mkString("{", ",", "}"),
     // A name past Jackson's read limit, and a text as long with none.
     "{\"" + "a" * 50001 + "\":1}", "[\"" + "a" * 50001 + "\"]")
@@ -128,9 +132,7 @@ class RecordFormatSpec extends AnyFunSuite {
     2 -> Gen.oneOf(plainTexts).map(bytes),
     2 -> Gen.oneOf(fallbackTexts).map(bytes),
     3 -> scanned(3).flatMap(mutated).map(bytes),
-    // Not the 1001-deep text: one `[` less is a value that Jackson reads
-    // but cannot write inside a record, on either path.
-    1 -> Gen.oneOf(fallbackTexts.filter(_.length < 500)).flatMap(mutated).map(bytes),
+    1 -> Gen.oneOf(fallbackTexts).flatMap(mutated).map(bytes),
     1 -> anyText.map(bytes),
     1 -> Gen.oneOf(malformed))
 
@@ -219,6 +221,18 @@ class RecordFormatSpec extends AnyFunSuite {
       Row("result", bytes("t"), 0, 1L, 2L, b, bytes("[]")),
       Row("result", bytes("t"), 0, 1L, 2L, bytes("{}"), b)))))
     assert(!broken.exists(identity))
+  }
+
+  test("texts nested 999, 1000 and 1001 deep: only one that fits inside a record parses") {
+    val texts = Seq(999, 1000, 1001).map(nested)
+    val out = written(frame(texts.map(t => kv(t, t))))
+    val reader = new com.fasterxml.jackson.databind.ObjectMapper()
+    val values = out.zip(texts).map { case ((byteFast, got, want, _), t) =>
+      assert(!byteFast && got.sameElements(want), t.length)
+      reader.readTree(new String(got, UTF_8).stripPrefix(", ")).get("value")
+    }
+    assert(values.head.isArray)
+    assert(values.tail.map(v => v.isTextual && texts.contains(v.asText)) == Seq(true, true))
   }
 
   test("ints, longs and a record of nulls on the byte path") {

@@ -34,4 +34,21 @@ class StreamingLogSpec extends AnyFunSuite {
       opts.copy(bootstrapServers = "sandbox:9092")).count()
     assert(streamed.length.toLong == batchCount)
   }
+
+  test("follow honours topics: a clicks replay holds the batch clicks, labelled clicks") {
+    val opts = QueryOptions(bootstrapServers = TestSpark.Sf, topics = Seq("clicks"))
+    val streamed = StreamingLog.replayAvailableNow(
+      StreamingLog.follow(spark, TestSpark.Sf, opts), "follow_clicks_test").collect()
+    val clicks = graft.log.RecordLog.topic(spark, TestSpark.Sf, "clicks").count()
+    assert(clicks > 0 && clicks < graft.log.RecordLog.events(spark, TestSpark.Sf).count())
+    assert(streamed.length.toLong == clicks)
+    assert(streamed.forall(_.getAs[String]("topic") == "clicks"))
+    val both = StreamingLog.replayAvailableNow(StreamingLog.follow(spark, TestSpark.Sf,
+      opts.copy(topics = Seq("events", "clicks"))), "follow_both_test").collect()
+    assert(both.groupBy(_.getAs[String]("topic")).map { case (t, rs) => t -> rs.length.toLong } ==
+      Map("events" -> graft.log.RecordLog.events(spark, TestSpark.Sf).count(), "clicks" -> clicks))
+    val e = intercept[IllegalArgumentException](
+      StreamingLog.follow(spark, TestSpark.Sf, opts.copy(topics = Seq("nope"))))
+    assert(e.getMessage.contains("unknown topic: nope"))
+  }
 }
