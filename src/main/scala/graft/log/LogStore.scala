@@ -23,8 +23,8 @@ import graft.core.Tables
   *
   * An archive is either pinned (built out of band, e.g. by
   * [[materialize]], and named by the session conf: [[RecordLog.archive]])
-  * or derived: `sfDir`'s archive at [[derivedDir]], kept current by
-  * [[ensureMaterialized]].
+  * or derived: `sfDir`'s archive at [[derivedDir]], one directory per
+  * fixture generation, built on its first read by [[derived]].
   */
 object LogStore {
 
@@ -41,52 +41,74 @@ object LogStore {
     }
 
   /** Where `sfDir`'s derived archive lives: one directory per fixture
-    * location under the JVM's temporary directory. */
+    * location AND generation under the JVM's temporary directory. The
+    * name carries the size and mtime of the fixture's events.parquet,
+    * from which every archived topic derives, so a regenerated fixture
+    * is archived into a new directory and never over the files that
+    * requests on the previous generation are still reading. */
   def derivedDir(sfDir: String): String = {
+    val events = new java.io.File(s"$sfDir/events.parquet")
+    Paths.get(System.getProperty("java.io.tmpdir"),
+      s"${derivedPrefix(sfDir)}${events.length()}-${events.lastModified()}").toString
+  }
+
+  /** The name every generation of `sfDir`'s derived archive starts with. */
+  private def derivedPrefix(sfDir: String): String = {
     val where = new java.io.File(sfDir).getCanonicalPath
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(where.getBytes(UTF_8)).take(8).map(b => f"${b & 0xff}%02x").mkString
-    Paths.get(System.getProperty("java.io.tmpdir"), s"graft-archive-$digest").toString
+    s"graft-archive-$digest-"
   }
 
-  /** Identity of the archive's upstream: every archived topic derives
-    * from the fixture's events.parquet, so its (size, mtime) names the
-    * fixture GENERATION the archive was built from. */
-  private def sourceFingerprint(sfDir: String): String = {
-    val f = new java.io.File(s"$sfDir/events.parquet")
-    s"${f.length()}:${f.lastModified()}"
-  }
-
-  /** [[materialize]] guarded by a source-fingerprint marker: reuse the
-    * existing archive only when every requested topic's `_SUCCESS` exists
-    * AND the marker matches the CURRENT fixture's events.parquet
-    * (size + mtime). A bare `_SUCCESS` check silently served archives
-    * built from a superseded fixture generation after the testdata was
-    * regenerated: timings and layout checks would run against stale rows
-    * with nothing flagging it.
+  /** [[materialize]] into `storeDir` unless every requested topic's
+    * `_SUCCESS` is already there.
     *
     * Builds of one directory are serialized: within the JVM by a lock per
     * directory, across processes by a file lock in it. A caller that
-    * waited re-checks the marker, so the first build is the only one. */
+    * waited re-checks, so the first build is the only one. */
   def ensureMaterialized(spark: SparkSession, sfDir: String, storeDir: String,
-      topics: Seq[String] = RecordLog.Topics): Unit = {
-    val marker = Paths.get(storeDir, ".source-fingerprint")
-    val fp = sourceFingerprint(sfDir)
-    def fresh = topics.forall(t => new java.io.File(s"$storeDir/$t/_SUCCESS").exists()) &&
-      Files.exists(marker) && new String(Files.readAllBytes(marker), UTF_8) == fp
-    if (!fresh) building.computeIfAbsent(storeDir, _ => new Object).synchronized {
-      Files.createDirectories(marker.getParent)
+      topics: Seq[String] = RecordLog.Topics): Boolean = {
+    def complete = topics.forall(t => new java.io.File(s"$storeDir/$t/_SUCCESS").exists())
+    !complete && building.computeIfAbsent(storeDir, _ => new Object).synchronized {
+      Files.createDirectories(Paths.get(storeDir))
       val lock = FileChannel.open(Paths.get(storeDir, ".lock"),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       try {
         lock.lock()
-        if (!fresh) {
-          materialize(spark, sfDir, storeDir, topics)
-          Files.write(marker, fp.getBytes(UTF_8))
-        }
+        !complete && { materialize(spark, sfDir, storeDir, topics); true }
       } finally lock.close()
     }
   }
+
+  /** `sfDir`'s derived archive ([[derivedDir]]), built when it is not
+    * complete. A build then removes the generations of `sfDir`'s archive
+    * older than the newest previous one: a request still reading the
+    * generation just superseded keeps its files. */
+  def derived(spark: SparkSession, sfDir: String): String = {
+    val dir = derivedDir(sfDir)
+    if (ensureMaterialized(spark, sfDir, dir)) {
+      val prefix = derivedPrefix(sfDir)
+      val generation = s"${java.util.regex.Pattern.quote(prefix)}(\\d+)-(\\d+)".r
+      val older = Option(Paths.get(dir).getParent.toFile.listFiles()).toSeq.flatten
+        .flatMap(f => f.getName match {
+          case generation(size, mtime) if f.getPath != dir => Some((mtime.toLong, size.toLong) -> f)
+          case _ => None
+        })
+        .sortBy(_._1).map(_._2).dropRight(1)
+      older.foreach(deleteTree)
+    }
+    dir
+  }
+
+  /** Delete `dir` and everything under it, as far as it still exists: a
+    * build in another process may be removing the same generation. */
+  private def deleteTree(dir: java.io.File): Unit =
+    scala.util.Try(Files.walk(dir.toPath)).foreach { paths =>
+      try paths.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      finally paths.close()
+    }
 
   /** One lock object per archive directory [[ensureMaterialized]] has
     * been asked to build. */

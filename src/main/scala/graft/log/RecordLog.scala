@@ -28,7 +28,8 @@ import graft.functions.GraftFunctions
   *  - pinned: `spark.graft.archiveDir` names it (a deployment whose
   *    archive is built out of band); or
   *  - derived: `sfDir`'s archive at [[LogStore.derivedDir]], built from
-  *    the fixture on the first read and rebuilt when the fixture changes.
+  *    the fixture on the first read; a regenerated fixture is archived
+  *    into a directory of its own.
   * [[build]], the synthesis of offsets from the raw table, is only what
   * [[LogStore.materialize]] writes. On a real Kafka-backed cluster
   * `partition`/`offset` arrive free from the source and that synthesis
@@ -94,14 +95,10 @@ object RecordLog {
 
   /** The archive `spark` reads `sfDir`'s topics from: the pinned
     * `spark.graft.archiveDir`, or else `sfDir`'s derived archive, built
-    * first when it is missing or from another fixture generation. The
+    * first when the fixture's current generation has none. The
     * mains call this once, untimed, before they time any query. */
   def archive(spark: SparkSession, sfDir: String): String =
-    pinned(spark).getOrElse {
-      val dir = LogStore.derivedDir(sfDir)
-      LogStore.ensureMaterialized(spark, sfDir, dir)
-      dir
-    }
+    pinned(spark).getOrElse(LogStore.derived(spark, sfDir))
 
   /** The synthesis of topic `name` from `sfDir`'s events table — what
     * [[LogStore.materialize]] archives. Its `row_number` window runs one

@@ -25,7 +25,8 @@ import graft.render.JsonArrayRender
   *
   * Sandbox binding: `bootstrap-servers` (and `/pipeline`'s `dir`) names
   * the fixture directory (the "cluster address" of the parquet-backed
-  * log) through the configured cluster map ([[cluster]]).
+  * log) through the configured cluster map ([[cluster]]); a follow
+  * request may still name any fixture directory.
   */
 final class HttpService(spark: SparkSession, port: Int,
     config: graft.core.Config = graft.core.Config.load()) {
@@ -78,8 +79,12 @@ final class HttpService(spark: SparkSession, port: Int,
     val parsed = try QueryOptions.fromMap(args) catch { case e: IllegalArgumentException =>
       return reply(ex, 400, errorJson(e.getMessage))
     }
+    // Follow still takes any fixture path: it tails the directory's
+    // events file and builds no archive, and the serving benchmark's
+    // follow workload sends a fixture it does not configure as a cluster.
     val opts = cluster(parsed.bootstrapServers) match {
       case Some(dir) => parsed.copy(bootstrapServers = dir)
+      case None if parsed.follow => parsed
       case None => return reply(ex, 400, errorJson(s"unknown bootstrap-servers: " +
         s"${parsed.bootstrapServers} (not a configured cluster name or location)"))
     }

@@ -86,24 +86,46 @@ class LogStoreSpec extends AnyFunSuite {
     } finally deleteTree(dir)
   }
 
+  /** Regenerate `sf`'s fixture with its first `n` events. */
+  private def regenerate(sf: String, n: Int): Unit =
+    Tables.load(spark, TestSpark.Sf, "events").orderBy("event_id").limit(n)
+      .write.mode("overwrite").parquet(s"$sf/events.parquet")
+
   test("ensureMaterialized rebuilds when the fixture generation changes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ensure").toString
-    LogStore.ensureMaterialized(spark, TestSpark.Sf, dir, Seq("events"))
-    val marker = java.nio.file.Paths.get(dir, ".source-fingerprint")
-    assert(java.nio.file.Files.exists(marker), "first build writes the marker")
-    val success = new java.io.File(s"$dir/events/_SUCCESS")
-    val t0 = success.lastModified()
-    // Same fixture → reuse (the archive is not rewritten).
-    Thread.sleep(1100) // _SUCCESS mtime granularity can be 1s
-    LogStore.ensureMaterialized(spark, TestSpark.Sf, dir, Seq("events"))
-    assert(success.lastModified() == t0, "unchanged fixture must not rebuild")
-    // Simulate a regenerated fixture: corrupt the marker (the recorded
-    // size+mtime no longer matches) → rebuild.
-    java.nio.file.Files.write(marker, "0:0".getBytes("UTF-8"))
-    LogStore.ensureMaterialized(spark, TestSpark.Sf, dir, Seq("events"))
-    assert(success.lastModified() > t0, "stale marker must force a rebuild")
-    assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") != "0:0",
-      "rebuild refreshes the marker")
+    val sf = fixture("graft-regen-sf", 100)
+    val gen1 = LogStore.derivedDir(sf)
+    var gen2 = gen1
+    try {
+      assert(LogStore.ensureMaterialized(spark, sf, gen1), "the first call builds")
+      assert(!LogStore.ensureMaterialized(spark, sf, gen1), "a complete archive is not rebuilt")
+      regenerate(sf, 50)
+      gen2 = LogStore.derivedDir(sf)
+      assert(gen2 != gen1, "a new fixture generation is archived into a new directory")
+      assert(LogStore.ensureMaterialized(spark, sf, gen2))
+      assert(LogStore.topic(spark, gen2, "events").count() == 50)
+      assert(LogStore.topic(spark, gen1, "events").count() == 100,
+        "the previous generation's files are not written over")
+    } finally Seq(gen1, gen2).foreach(deleteTree)
+  }
+
+  test("a read in progress keeps its generation; older generations are removed") {
+    val sf = fixture("graft-inflight-sf", 100)
+    val gens = scala.collection.mutable.Buffer(LogStore.derivedDir(sf))
+    def exists(d: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(d))
+    try {
+      // Resolved on generation 1; its scan and its footer bounds run later.
+      val reading = RecordLog.seekable(spark, sf, "events")
+      regenerate(sf, 50)
+      gens += LogStore.derivedDir(sf)
+      assert(RecordLog.topic(spark, sf, "events").count() == 50)
+      assert(reading.records.count() == 100)
+      assert(reading.bounds().map(_.values.map(b => b._2 - b._1).sum).contains(100L))
+      regenerate(sf, 30)
+      gens += LogStore.derivedDir(sf)
+      assert(RecordLog.topic(spark, sf, "events").count() == 30)
+      assert(gens.map(exists) == Seq(false, true, true),
+        "a build keeps the newest previous generation and removes the older ones")
+    } finally gens.foreach(deleteTree)
   }
 
   test("partition predicates prune DIRECTORIES on the archive scan") {
