@@ -61,7 +61,7 @@ object LogStore {
   }
 
   /** [[materialize]] into `storeDir` unless every requested topic's
-    * `_SUCCESS` is already there.
+    * `_SUCCESS` is already there; true when this call built it.
     *
     * Builds of one directory are serialized: within the JVM by a lock per
     * directory, across processes by a file lock in it. A caller that
